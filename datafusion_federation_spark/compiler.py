@@ -10,6 +10,7 @@ whole-stage codegen all apply untouched.
 RemoteQueryNode leaves (produced by the federation pass) execute via their
 provider's SQLExecutor and get a schema-cast projection appended —
 the SchemaCastScanExec analog (reference src/schema_cast/mod.rs:27-146).
+Their cast target is inferred here and nowhere else (``_remote_schema``).
 """
 
 from __future__ import annotations
@@ -26,6 +27,7 @@ from .plans.nodes import (
     RemoteQueryNode, Scan, SetOp, Sort, SubqueryAlias, Union, Window,
 )
 from .schema_cast import cast_dataframe
+from .sources.provider import SchemaCache
 
 _JOIN_HOW = {
     "inner": "inner", "left": "left", "right": "right", "full": "outer",
@@ -55,6 +57,8 @@ class Compiler:
         #: memoization tests read
         self._bnl_gate_cache: dict = {}
         self._bnl_probe_count = 0
+        #: cast targets of federated nodes, cleared on registration
+        self._schema_cache = SchemaCache()
         #: opt-in: before executing a federated join input, compute
         #: min/max of the other side's join key and inline the bounds
         #: into the remote SQL (the automated form of the reference's
@@ -93,6 +97,16 @@ class Compiler:
             self._recursive_results.clear()
             self._static_reuse.clear()
 
+    def _remote_schema(self, p: RemoteQueryNode):
+        """Cast target of a federated node (src/sql/mod.rs:143-161): the
+        registered schema of a whole-table read, else inferred here."""
+        if p.schema is not None:
+            return p.schema
+        from . import schema_infer
+        return schema_infer.infer_plan_schema(
+            self.spark, p.plan, self._schema_cache,
+            (p.provider.executor, p.base_sql))
+
     # ------------------------------------------------------------------
     def _c(self, p: Plan) -> DataFrame:
         reused = self._probe_reuse.pop(id(p), None)
@@ -110,14 +124,7 @@ class Compiler:
         if isinstance(p, RemoteQueryNode):
             sql = p.provider.executor.apply_runtime_filters(
                 p.sql, p.runtime_filters)
-            schema = p.schema
-            if schema is None:
-                # claim() ran without an active SparkSession; infer the
-                # plan's output schema here so the cast layer engages
-                # universally (reference wraps EVERY VirtualExecutionPlan
-                # in SchemaCastScanExec — src/sql/mod.rs:143-161)
-                from .schema_infer import infer_plan_schema
-                schema = infer_plan_schema(self.spark, p.plan)
+            schema = self._remote_schema(p)
             df = p.provider.executor.execute(self.spark, sql,
                                              schema=schema)
             if schema is not None:
@@ -1827,16 +1834,16 @@ class Compiler:
           value is NULL, which min/max skip anyway).
 
         Every remaining shape (value-offset RANGE bounds, bounded ROWS
-        with GROUP/TIES) falls back to the r8 collect-and-filter form:
-        collect_list(struct(rn, pk, x)) over the declared frame, drop
-        excluded rows by row_number identity / peer-key equality,
-        array_min/array_max the survivors. The fallback materializes
-        the frame per row — fine for BOUNDED frames, and the unbounded
-        frames that made it quadratic-per-partition at 100 TB (the r13
-        verdict's last named scale-killer, q107) now take the split
-        paths: O(1) state per row, no arrays (r14 optimization round,
-        guide §2.4/§5). Helper columns are shared per (partition,
-        order) spec and projected away by the enclosing select."""
+        with GROUP/TIES, CURRENT ROW over a partial RANGE frame) falls
+        back to the r8 collect-and-filter form: collect_list(struct(rn,
+        pk, x)) over the declared frame, drop excluded rows by
+        row_number identity / peer-key equality, array_min/array_max
+        the survivors, materializing the frame per row. That is fine
+        for BOUNDED frames; most unbounded ones take the split paths
+        (r14, O(1) state per row), but EXCLUDE CURRENT ROW over a
+        one-sided-unbounded RANGE frame still collects an unbounded
+        frame per row, quadratic per partition. Helper columns are
+        shared per (partition, order) spec and projected away."""
         from pyspark.sql import Window as W
 
         from .expressions import (
@@ -2157,7 +2164,8 @@ class Compiler:
         # aggregate below resolves (found by a correlated `< ANY
         # (SELECT o_totalprice / 100 ...)` probe failing with
         # UNRESOLVED_COLUMN `expr`)
-        plan, out_col = _stabilize_first_output(x.plan)
+        plan, out_col = _stabilize_first_output(x.plan,
+                                                self._remote_schema)
         # ONE shared aggregate plan emits both the extremum and the
         # count: both ScalarSubquery nodes point at the SAME object, so
         # _attach_scalar_subqueries compiles (and a federated subquery
@@ -3086,17 +3094,17 @@ def _plan_output_cols(p: Plan):
     return _plan_output_cols(inputs[0]) if inputs else None
 
 
-def _stabilize_first_output(p: Plan):
+def _stabilize_first_output(p: Plan, remote_schema):
     """(plan, first-output-name) with the name GUARANTEED to exist on
     the compiled frame: a bare-expression first projection/aggregate
     gets an explicit ``__qv`` alias (Spark auto-names unaliased
     expressions after their SQL text, so output_name()'s "expr"
-    fallback never resolves — r9, quantifier-rewrite fix). Named
-    outputs (Alias/Col) pass through untouched."""
+    fallback never resolves — r9, quantifier-rewrite fix). Named outputs
+    pass through; a federated node's come from ``remote_schema(node)``."""
     from .expressions import Alias as _A, Col as _C
 
     if isinstance(p, SubqueryAlias):
-        inner, col = _stabilize_first_output(p.input)
+        inner, col = _stabilize_first_output(p.input, remote_schema)
         if inner is p.input:
             return p, col
         return SubqueryAlias(inner, p.alias), col
@@ -3105,7 +3113,7 @@ def _stabilize_first_output(p: Plan):
         if isinstance(e0, (_A, _C)):
             return p, e0.output_name()
         if isinstance(e0, Star):
-            return p, _plan_output_col(p)
+            return p, _plan_output_col(p, remote_schema)
         return (Project(p.input, [_A(e0, "__qv"),
                                   *list(p.projections)[1:]]), "__qv")
     if isinstance(p, Aggregate):
@@ -3128,11 +3136,11 @@ def _stabilize_first_output(p: Plan):
                                   [_A(g0, "__qv"),
                                    *list(p.group_by)[1:]],
                                   list(p.aggregates), p.having), "__qv")
-        return p, _plan_output_col(p)
-    return p, _plan_output_col(p)
+        return p, _plan_output_col(p, remote_schema)
+    return p, _plan_output_col(p, remote_schema)
 
 
-def _plan_output_col(p: Plan) -> str:
+def _plan_output_col(p: Plan, remote_schema) -> str:
     """First output column name of a sub-plan (for quantifier rewrites)."""
     if isinstance(p, Project):
         return p.projections[0].output_name()
@@ -3141,11 +3149,13 @@ def _plan_output_col(p: Plan) -> str:
         return out[0].output_name()
     if isinstance(p, Scan) and p.projection:
         return p.projection[0]
-    if isinstance(p, RemoteQueryNode) and p.schema is not None:
-        return p.schema.fields[0].name
+    if isinstance(p, RemoteQueryNode):
+        schema = remote_schema(p)   # None: uncast, the remote's names
+        return (schema.fields[0].name if schema is not None
+                else _plan_output_col(p.plan, remote_schema))
     inputs = p.inputs()
     if inputs:
-        return _plan_output_col(inputs[0])
+        return _plan_output_col(inputs[0], remote_schema)
     raise ValueError(f"cannot infer output column of {type(p).__name__}")
 
 

@@ -39,7 +39,7 @@ class FederationEngine:
         self.compiler = Compiler(spark)
 
     # -- registration ------------------------------------------------------
-    def _data_changed(self) -> None:
+    def _data_changed(self, types: bool = True) -> None:
         """Invalidate size-dependent compile caches (r12, ADVICE r11
         #1): the theta-BNL probe memoizes a table's small-enough
         verdict per structural plan, valid only while the underlying
@@ -47,8 +47,12 @@ class FederationEngine:
         resolves to — registration, discovery, inserts — clears it so
         a table that grows past the gate re-probes instead of
         broadcasting an oversized inner (and a shrunk one stops
-        refusing)."""
+        refusing). Registration and discovery can also change column
+        types, so the inferred schemas go too; row-only DML passes
+        ``types=False`` and keeps them."""
         self.compiler._bnl_gate_cache.clear()
+        if types:
+            self.compiler._schema_cache.clear()
 
     def register_local_parquet(self, name: str, path: str):
         self._data_changed()
@@ -295,7 +299,7 @@ class FederationEngine:
             stmt = f"INSERT INTO {tbl}{collist} {remote_sql}"
             if dry_run:
                 return stmt
-            self._data_changed()    # rows will move: BNL verdicts out
+            self._data_changed(types=False)  # rows move: BNL out
             return h.provider.executor.execute_statement(
                 self.spark, stmt)
         # local target: compute the source (remote subtrees still
@@ -406,7 +410,6 @@ class FederationEngine:
                 return (f"{kw} {tbl} AS {core.sql} WITH NO DATA;\n"
                         f"INSERT INTO {tbl} {core.sql}")
             return f"{kw} {tbl} AS {core.sql}"
-        self._data_changed()
         if getattr(d, "ctas_needs_no_data", False):
             prov.executor.execute_statement(
                 self.spark, f"{kw} {tbl} AS {core.sql} WITH NO DATA")
@@ -512,7 +515,7 @@ class FederationEngine:
             stmt += f" WHERE {pred.to_sql(d)}"
         if dry_run:
             return stmt
-        self._data_changed()
+        self._data_changed(types=False)
         return h.provider.executor.execute_statement(self.spark, stmt)
 
     def _sql_update(self, query: str, params: Optional[dict] = None,
@@ -537,7 +540,7 @@ class FederationEngine:
             stmt += f" WHERE {pred.to_sql(d)}"
         if dry_run:
             return stmt
-        self._data_changed()
+        self._data_changed(types=False)
         return h.provider.executor.execute_statement(self.spark, stmt)
 
     def insert_into(self, table_name: str, df: DataFrame,
@@ -546,7 +549,7 @@ class FederationEngine:
         provider, src/table_provider.rs:126-139): remote tables go
         through the executor's insert hook; local parquet tables append
         to their path."""
-        self._data_changed()     # rows added: stale BNL verdicts out
+        self._data_changed(types=False)  # rows added: BNL out
         h = self.catalog.table(table_name)
         if h.provider is not None and hasattr(h.provider, "executor"):
             ref = h.remote.ref if h.remote is not None else table_name

@@ -15,6 +15,10 @@ This is analysis-only — no Spark job runs on an empty frame until an
 action is called, and we never call one — yet it yields exact Spark
 semantics for the whole expression surface with zero hand-written type
 rules.
+
+The engine's ``Compiler`` is the one caller, in its own session and
+through its own ``SchemaCache``, for each federated node but a
+whole-table read.
 """
 
 from __future__ import annotations
@@ -22,40 +26,27 @@ from __future__ import annotations
 from contextlib import contextmanager
 from typing import Any, Optional
 
-#: (id(spark), cache_key) -> StructType. The unparsed SQL of a claimed
-#: plan fully determines its output schema for a given provider, so
-#: repeated claims of the same query (interactive re-runs, test suites)
-#: skip the Catalyst analysis round-trips entirely.
-_CACHE: dict = {}
-_CACHE_MAX = 1024
+from .compiler import Compiler
+from .plans.nodes import RemoteQueryNode, Scan
+from .sources.provider import SchemaCache, empty_dataframe
 
 
-def infer_plan_schema(spark, plan, cache_key: Optional[str] = None
-                      ) -> Optional[Any]:
-    """Best-effort output schema of a plan. Returns a pyspark StructType,
-    or None when inference is impossible (a scan with no registered
-    schema, or a construct the local compiler refuses)."""
-    if cache_key is not None:
-        # applicationId, not id(spark): a torn-down session's address can
-        # be reused by a new allocation, which would serve stale schemas
-        try:
-            app = spark.sparkContext.applicationId
-        except Exception:
-            app = id(spark)
-        full_key = (app, cache_key)
-    else:
-        full_key = None
-    if full_key is not None and full_key in _CACHE:
-        return _CACHE[full_key]
+def infer_plan_schema(spark, plan, cache: SchemaCache, key) -> Optional[Any]:
+    """Output schema of a plan as a pyspark StructType, or None when
+    inference is impossible (a scan with no registered schema, or a
+    construct Catalyst refuses, e.g. a DuckDB-only function); a failure
+    is counted on ``cache`` and the query runs uncast."""
+    schema = cache.get(key)
+    if schema is not None:
+        return schema
     try:
         with _quiet_analysis_errors(spark):
-            schema = _ShellCompiler(spark).compile(plan).schema
-    except Exception:
+            schema = _ShellCompiler(spark, cache).compile(plan).schema
+    except Exception as exc:  # noqa: BLE001 - counted, not raised
+        cache.failures += 1
+        cache.last_failure = f"{type(exc).__name__}: {exc}"
         return None
-    if full_key is not None:
-        if len(_CACHE) >= _CACHE_MAX:
-            _CACHE.clear()
-        _CACHE[full_key] = schema
+    cache[key] = schema
     return schema
 
 
@@ -63,8 +54,8 @@ def infer_plan_schema(spark, plan, cache_key: Optional[str] = None
 def _quiet_analysis_errors(spark):
     """Silence PySpark's query-context error loggers for the duration
     of a probe whose failure is EXPECTED (remote-only functions like
-    DuckDB's string_split fail Catalyst analysis by design; the caller
-    returns None and the query proceeds federated). PySpark 4 logs
+    DuckDB's string_split fail Catalyst analysis by design; the failure
+    is counted and the query proceeds federated). PySpark 4 logs
     every captured AnalysisException as a full ERROR-level JSON stack
     trace through the plain-Python loggers below
     (pyspark/errors/exceptions/base.py:_log_exception) — an operational
@@ -94,51 +85,33 @@ def _quiet_analysis_errors(spark):
             lg.setLevel(lv)
 
 
-def _shell_schema(handle, spark):
-    """Schema for a scan leaf: the registered one, else the file
-    footer for local tables, read in the handle's OWN format (review
-    r7: this was the one fallback_path reader not updated for ORC —
-    a degraded-registration ORC table would have been footer-read as
-    parquet here). Memoized on the handle."""
-    if handle.schema is not None:
-        return handle.schema
-    if handle.fallback_path is not None:
-        handle.schema = (spark.read
-                         .format(getattr(handle, "fallback_format",
-                                         "parquet"))
-                         .load(handle.fallback_path).schema)
-        return handle.schema
-    raise ValueError(f"no schema registered for {handle.local_name!r}")
+class _ShellCompiler(Compiler):
+    """Compiler that substitutes every leaf with an empty DataFrame of
+    the leaf's declared schema and reuses the real Compiler above the
+    leaves (so inference and execution can never diverge on operator
+    semantics). A nested federated node infers through the same cache."""
 
-
-class _ShellCompiler:
-    """Compiler façade that substitutes every leaf with an empty
-    DataFrame of the leaf's declared schema, then reuses the real
-    Compiler for everything above the leaves (so inference and
-    execution can never diverge on operator semantics)."""
-
-    def __init__(self, spark):
-        from .compiler import Compiler
-
-        class _Shell(Compiler):
-            def _c(inner, p):  # noqa: N805 - nested subclass
-                from .plans.nodes import RemoteQueryNode, Scan
-                if isinstance(p, Scan):
-                    from .sources.provider import empty_dataframe
-                    schema = _shell_schema(p.table, inner.spark)
-                    df = empty_dataframe(inner.spark, schema)
-                    if p.projection:
-                        df = df.select(*p.projection)
-                    return df.alias(p.table.local_name)
-                if isinstance(p, RemoteQueryNode):
-                    if p.schema is None:
-                        raise ValueError(
-                            "nested federated node without schema")
-                    from .sources.provider import empty_dataframe
-                    return empty_dataframe(inner.spark, p.schema)
-                return super()._c(p)
-
-        self._compiler = _Shell(spark, runtime_join_filters=False)
+    def __init__(self, spark, cache: SchemaCache):
+        super().__init__(spark)
+        self._schema_cache = cache
 
     def compile(self, plan):
-        return self._compiler.compile(plan)
+        # a cache miss's Catalyst analysis; perfbench times this name
+        return super().compile(plan)
+
+    def _c(self, p):
+        if isinstance(p, Scan):
+            # claimed plans scan remote tables, registered with schemas
+            if p.table.schema is None:
+                raise ValueError(
+                    f"no schema registered for {p.table.local_name!r}")
+            df = empty_dataframe(self.spark, p.table.schema)
+            if p.projection:
+                df = df.select(*p.projection)
+            return df.alias(p.table.local_name)
+        if isinstance(p, RemoteQueryNode):
+            schema = self._remote_schema(p)
+            if schema is None:
+                raise ValueError("nested federated node without schema")
+            return empty_dataframe(self.spark, schema)
+        return super()._c(p)

@@ -24,10 +24,43 @@ Concrete executors:
 from __future__ import annotations
 
 import time
+from collections import OrderedDict
+from contextlib import suppress
 from dataclasses import dataclass, field
 from typing import Any, Callable, Dict, List, Optional, Sequence
 
 from ..dialects import get_dialect
+
+
+#: bound of a compiler's inferred schemas and an executor's row counts
+CACHE_MAX = 1024
+
+
+class LRU(OrderedDict):
+    """Dict of at most CACHE_MAX entries, evicting the least recent; a
+    clear() from another thread makes a miss, never a KeyError."""
+
+    def get(self, key, default=None):
+        try:
+            self.move_to_end(key)
+            return self[key]
+        except KeyError:
+            return default
+
+    def __setitem__(self, key, value):
+        super().__setitem__(key, value)
+        with suppress(KeyError):
+            self.move_to_end(key)
+            if len(self) > CACHE_MAX:
+                self.popitem(last=False)
+
+
+class SchemaCache(LRU):
+    """Inferred schemas keyed ``(executor, base_sql)``: executors hash by
+    identity, so same-named databases never share one. Counts failures."""
+
+    failures = 0
+    last_failure: Optional[str] = None
 
 
 def empty_dataframe(spark, schema):
@@ -180,17 +213,10 @@ class SQLProvider(FederationProvider):
     """Federation provider backed by a SQLExecutor
     (SQLFederationProvider analog, src/sql/mod.rs:52-61)."""
 
-    _cache_seq = 0
-
     def __init__(self, executor: SQLExecutor):
         super().__init__(executor.name, executor.compute_context)
         self.executor = executor
         self.dialect = get_dialect(executor.dialect)
-        # monotonic token for the schema-inference cache key: id(self)
-        # can be reused by a later allocation after this provider dies,
-        # which would serve ITS schemas to the newcomer
-        SQLProvider._cache_seq += 1
-        self._cache_token = SQLProvider._cache_seq
 
     def can_federate(self) -> bool:
         return True
@@ -217,25 +243,16 @@ class SQLProvider(FederationProvider):
         for t in tables:
             if t.remote is not None and t.remote.sql_query_rewriter is not None:
                 sql = t.remote.sql_query_rewriter(sql)
-        # keyed by THIS provider object, not (name, context): two
-        # same-identity providers over different databases (both
-        # DuckDB ':memory:', say) must not share inferred schemas —
-        # a stale hit would make the cast layer corrupt values silently
-        cache_key = f"p{self._cache_token}|{base_sql}"
         return RemoteQueryNode(plan=plan, provider=self, sql=sql,
                                base_sql=base_sql,
-                               schema=_expected_schema(plan, cache_key))
+                               schema=_expected_schema(plan))
 
 
-def _expected_schema(plan, cache_key=None):
-    """Expected output schema of a claimed sub-plan, driving the
-    schema-cast layer. The reference wraps EVERY VirtualExecutionPlan in
-    SchemaCastScanExec using the plan's own DFSchema
-    (src/sql/mod.rs:143-161); we match that universally: whole-table
-    shapes read the handle's registered schema directly, everything else
-    infers through Catalyst over empty frames (schema_infer). None only
-    when no SparkSession is active AND the shape is not a whole table
-    (the compiler re-infers at execution time as a backstop)."""
+def _expected_schema(plan):
+    """Expected output schema of a claimed sub-plan when it needs no
+    Spark: a whole-table shape reads the handle's registered schema.
+    Every other shape returns None, and the engine's compiler infers it
+    through Catalyst (``Compiler._remote_schema``, schema_infer)."""
     from ..expressions import Star
     from ..plans.nodes import Project, Scan, SubqueryAlias
 
@@ -252,15 +269,9 @@ def _expected_schema(plan, cache_key=None):
             node = node.input
             continue
         break
-    if (isinstance(node, Scan) and not node.projection
-            and node.table.schema is not None):
+    if isinstance(node, Scan) and not node.projection:
         return node.table.schema
-    from pyspark.sql import SparkSession
-    spark = SparkSession.getActiveSession()
-    if spark is None:
-        return None
-    from ..schema_infer import infer_plan_schema
-    return infer_plan_schema(spark, plan, cache_key=cache_key)
+    return None
 
 
 # ---------------------------------------------------------------------------
@@ -289,7 +300,7 @@ class DuckDBExecutor(SQLExecutor):
         self.compute_context = compute_context or database
         self.conn = duckdb.connect(database)
         self._tables: Dict[str, str] = {}
-        self._row_cache: Dict[str, int] = {}
+        self._row_cache: LRU = LRU()
 
     def register_parquet(self, name: str, path: str):
         self.conn.execute(
@@ -355,6 +366,7 @@ class DuckDBExecutor(SQLExecutor):
                 f'INSERT INTO "{name}" SELECT * FROM __fed_insert')
         finally:
             self.conn.unregister("__fed_insert")
+        self._row_cache.clear()     # cached counts no longer bound it
         return arrow.num_rows
 
     def execute_statement(self, spark, sql: str):

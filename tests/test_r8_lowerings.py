@@ -318,15 +318,18 @@ def test_with_ties_plan_has_no_window_and_pushes_boundary(spark):
 
 
 def test_minmax_exclude_plan_stays_jvm_side(spark):
-    # the collect/filter/array_min pipeline is Catalyst lambdas — no
-    # Python evaluation anywhere; windows share one partitioning
+    # a value-offset RANGE frame with EXCLUDE GROUP still takes the
+    # collect/filter/array_min fallback: Catalyst lambdas — no Python
+    # evaluation anywhere; the rn helper and the frame collect share
+    # one partitioning
     from datafusion_federation_spark.engine import FederationEngine
     eng = FederationEngine(spark)
     eng.register_local_parquet("orders", f"{TESTDATA}/orders.parquet")
     df = eng.sql(
         "SELECT MIN(o_totalprice) OVER (PARTITION BY o_custkey "
-        "ORDER BY o_orderdate, o_orderkey ROWS BETWEEN 2 PRECEDING "
-        "AND 2 FOLLOWING EXCLUDE CURRENT ROW) AS mn FROM orders")
+        "ORDER BY o_orderkey RANGE BETWEEN 1 PRECEDING "
+        "AND 1 FOLLOWING EXCLUDE GROUP) AS mn FROM orders")
+    assert "array_min" in _plan(df)
     plan = _plan(df)
     assert "BatchEvalPython" not in plan and "ArrowEval" not in plan
     assert plan.count("Exchange") == 1, \
