@@ -8,9 +8,12 @@ parquet, column pruning, broadcast-vs-sort-merge join selection, AQE, and
 whole-stage codegen all apply untouched.
 
 RemoteQueryNode leaves (produced by the federation pass) execute via their
-provider's SQLExecutor and get a schema-cast projection appended —
-the SchemaCastScanExec analog (reference src/schema_cast/mod.rs:27-146).
-Their cast target is inferred here and nowhere else (``_remote_schema``).
+provider's SQLExecutor and are cast to the plan's expected schema — the
+SchemaCastScanExec analog (reference src/schema_cast/mod.rs:27-146). The
+cast projection is appended only when the remote result differs from
+that schema in a column name or type; a strongly typed Arrow remote
+usually matches it already. The cast target is inferred here and nowhere
+else (``_remote_schema``).
 """
 
 from __future__ import annotations
@@ -26,8 +29,9 @@ from .plans.nodes import (
     Limit, OneRow, Plan, Project, RecursiveCTE, RecursiveRef,
     RemoteQueryNode, Scan, SetOp, Sort, SubqueryAlias, Union, Window,
 )
+from .federation import absorbed_relations
 from .schema_cast import cast_dataframe
-from .sources.provider import SchemaCache
+from .sources.provider import LRU, SchemaCache
 
 _JOIN_HOW = {
     "inner": "inner", "left": "left", "right": "right", "full": "outer",
@@ -53,9 +57,9 @@ class Compiler:
         #: above it the historical refusal stands
         self.theta_bnl_rows = 10_000
         #: r11: probe-verdict memo for _theta_bnl_gate (keyed on the
-        #: subquery body's structural repr) + a probe counter the
-        #: memoization tests read
-        self._bnl_gate_cache: dict = {}
+        #: subquery body's structural repr; a bounded LRU) + a probe
+        #: counter the memoization tests read
+        self._bnl_gate_cache = LRU()
         self._bnl_probe_count = 0
         #: cast targets of federated nodes, cleared on registration
         self._schema_cache = SchemaCache()
@@ -104,8 +108,7 @@ class Compiler:
             return p.schema
         from . import schema_infer
         return schema_infer.infer_plan_schema(
-            self.spark, p.plan, self._schema_cache,
-            (p.provider.executor, p.base_sql))
+            self.spark, p.plan, self._schema_cache, p.provider.executor)
 
     # ------------------------------------------------------------------
     def _c(self, p: Plan) -> DataFrame:
@@ -127,9 +130,10 @@ class Compiler:
             schema = self._remote_schema(p)
             df = p.provider.executor.execute(self.spark, sql,
                                              schema=schema)
-            if schema is not None:
+            if schema is not None and _cast_changes(df.schema, schema):
                 # SchemaCastScanExec analog: cast the remote result to the
-                # plan's expected schema right after the read.
+                # plan's expected schema right after the read, unless the
+                # remote already returned its names and types.
                 df = cast_dataframe(df, schema)
             # statistics-driven broadcast posture: a known-small federated
             # result is a broadcast candidate for downstream joins
@@ -151,12 +155,13 @@ class Compiler:
                     est *= 2
                 if est <= self.broadcast_threshold_rows:
                     df = F.broadcast(df)
-            # the claimed sub-plan's root alias was absorbed into the
-            # remote SQL; re-apply it on the DataFrame so local parents
-            # (joins above the federation cut) can still qualify columns
-            alias = _root_alias(p.plan)
-            if alias:
-                df = df.alias(alias)
+            # the claimed sub-plan's qualifiers were absorbed into the
+            # remote SQL; re-apply the first on the DataFrame so local
+            # parents (joins above the federation cut) can still qualify
+            # columns — federation.requalify points the others at it
+            rels = absorbed_relations(p.plan)
+            if rels:
+                df = df.alias(rels[0][0])
             return df
 
         if isinstance(p, Scan):
@@ -719,8 +724,6 @@ class Compiler:
             self._bnl_probe_count += 1
             verdict = df.limit(gate + 1).count() <= gate
             if key is not None:
-                if len(self._bnl_gate_cache) > 256:
-                    self._bnl_gate_cache.clear()
                 self._bnl_gate_cache[key] = verdict
         if verdict:
             return F.broadcast(df)
@@ -2932,18 +2935,11 @@ def _corr_to_spark(e: Expr, outer_df: DataFrame, sub_df: DataFrame,
         f"correlated predicate form {type(e).__name__} not supported")
 
 
-def _root_alias(p: Plan):
-    """Alias at a plan's root, looking through wrap_projection's
-    SELECT-* shell."""
-    if isinstance(p, SubqueryAlias):
-        return p.alias
-    if (isinstance(p, Project) and len(p.projections) == 1
-            and isinstance(p.projections[0], Star)
-            and p.projections[0].table is None
-            and not p.projections[0].replace
-            and not p.projections[0].exclude):
-        return _root_alias(p.input)
-    return None
+def _cast_changes(actual, expected) -> bool:
+    """Whether casting ``actual`` to ``expected`` renames or retypes a
+    column. Nullability is not compared: the cast keeps the source's."""
+    return ([(f.name, f.dataType) for f in actual.fields]
+            != [(f.name, f.dataType) for f in expected.fields])
 
 
 def _pivot_value_name(v) -> str:

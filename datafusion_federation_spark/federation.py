@@ -14,19 +14,23 @@ takes over (SURVEY.md §4, §7).
 
 from __future__ import annotations
 
-from typing import Optional, Tuple
+import dataclasses
+from collections import Counter
+from typing import List, Optional, Tuple
 
 from .expressions import (
-    Exists, Expr, InSubquery, OuterRef, ScalarSubquery, SetComparison, walk,
+    Col, Exists, Expr, InSubquery, OuterRef, ScalarSubquery, SetComparison,
+    walk,
 )
 from .plans.nodes import (
-    AsofJoin, OneRow, Plan, Project, RecursiveRef, RemoteQueryNode, Scan,
-    SubqueryAlias, walk_plan,
+    AsofJoin, Filter, Join, OneRow, Plan, Project, RecursiveRef,
+    RemoteQueryNode, Scan, SubqueryAlias, walk_plan,
 )
 from .expressions import Star
 from .sources.provider import FederationProvider, LocalSparkProvider
 
 _LOCAL = LocalSparkProvider()
+_SUBQUERIES = (Exists, InSubquery, ScalarSubquery, SetComparison)
 
 
 class ScanResult:
@@ -243,7 +247,163 @@ def federate(plan: Plan) -> Plan:
     plan = push_filters(plan)
     plan = prune_scans(plan)
     new_plan, _ = _optimize_recursively(plan, is_root=True, memo={})
-    return new_plan
+    return requalify(new_plan)
+
+
+class AmbiguousFederatedColumn(ValueError):
+    """A qualified reference above a federated join names a column that
+    more than one of the join's inputs produce. The remote result has
+    one column per input under that name and a single qualifier, so the
+    reference cannot be told apart from its namesake."""
+
+
+def absorbed_relations(plan: Plan) -> List[Tuple[str, Plan]]:
+    """``(qualifier, relation)`` for each relation a claimed sub-plan
+    absorbs whose qualifier stays visible above it, in output order: a
+    derived-table alias or a scan's table name, seen through joins,
+    filters and wrap_projection's SELECT-* shell. The compiler aliases
+    the remote frame with the first; ``requalify`` points references
+    to the others at it."""
+    if isinstance(plan, SubqueryAlias):
+        return [(plan.alias, plan)]
+    if isinstance(plan, Scan):
+        return [(plan.table.local_name, plan)]
+    if isinstance(plan, (Join, Filter)) or _is_star_shell(plan):
+        return [r for i in plan.inputs() for r in absorbed_relations(i)]
+    return []
+
+
+def _is_star_shell(p: Plan) -> bool:
+    return (isinstance(p, Project) and len(p.projections) == 1
+            and isinstance(p.projections[0], Star)
+            and p.projections[0].table is None
+            and not p.projections[0].replace
+            and not p.projections[0].exclude)
+
+
+def requalify(plan: Plan) -> Plan:
+    """Re-point qualified column references above each claimed join.
+
+    A claimed join absorbs one qualifier per input (``o`` and ``c`` in
+    ``orders o JOIN customer c``), but its result is one DataFrame with
+    one alias. Every reference to an absorbed qualifier in the scope
+    that sees the join is rewritten to the alias the compiler applies;
+    a name more than one input produces raises
+    ``AmbiguousFederatedColumn``. Shared nodes stay shared."""
+    if not any(isinstance(n, RemoteQueryNode)
+               and len(absorbed_relations(n.plan)) > 1
+               for n in walk_plan(plan)):
+        return plan
+
+    def node(old: Plan, new: Plan) -> Plan:
+        targets = _absorbed_in_scope(old)
+        if not targets:
+            return new
+        new = _map_exprs(new, lambda e: _repoint(e, targets))
+        if isinstance(new, Project):
+            new = dataclasses.replace(new, projections=[
+                x for e in new.projections
+                for x in _expand_star(e, targets)])
+        return new
+
+    return _rewrite_plan(plan, node)
+
+
+def _rewrite_plan(plan: Plan, node) -> Plan:
+    """Bottom-up plan rewrite: ``node(old, rebuilt)`` gives each node's
+    replacement once its inputs are rewritten; shared nodes stay
+    shared."""
+    from .optimizer import _rebuild
+    memo: dict = {}
+
+    def go(p: Plan) -> Plan:
+        hit = memo.get(id(p))
+        if hit is None:
+            hit = memo[id(p)] = node(
+                p, _rebuild(p, [go(i) for i in p.inputs()]))
+        return hit
+
+    return go(plan)
+
+
+def _absorbed_in_scope(p: Plan) -> dict:
+    """Lowercased qualifier -> (alias the compiler applies, names more
+    than one input produces, the qualifier's own columns or None) for
+    every claimed join visible to the expressions of ``p``; a
+    SubqueryAlias hides what is beneath it."""
+    from .optimizer import _plan_cols
+    out: dict = {}
+
+    def visit(n: Plan) -> None:
+        if isinstance(n, SubqueryAlias):
+            return
+        if isinstance(n, RemoteQueryNode):
+            rels = absorbed_relations(n.plan)
+            if len(rels) > 1:
+                counts = Counter(c.lower() for _, r in rels
+                                 for c in _plan_cols(r) or ())
+                twice = {c for c, k in counts.items() if k > 1}
+                for q, r in rels:
+                    out[q.lower()] = (rels[0][0], twice, _plan_cols(r))
+            return
+        for i in n.inputs():
+            visit(i)
+
+    for i in p.inputs():
+        visit(i)
+    return out
+
+
+def _repoint(e: Expr, targets: dict) -> Expr:
+    if isinstance(e, _SUBQUERIES):
+        # the subquery's correlated references point at this scope too
+        e = dataclasses.replace(e, plan=_rewrite_plan(
+            e.plan, lambda old, new: _map_exprs(
+                new, lambda x: _repoint(x, targets)
+                if isinstance(x, OuterRef) else x)))
+        return _map_exprs(e, lambda x: _repoint(x, targets))
+    if not (isinstance(e, (Col, OuterRef)) and e.table
+            and e.table.lower() in targets):
+        return e
+    alias, twice, _ = targets[e.table.lower()]
+    if e.name.lower() in twice:
+        raise AmbiguousFederatedColumn(
+            f"{e.table}.{e.name} is ambiguous above the federated join "
+            f"of {sorted(targets)}: more than one input has a column "
+            f"{e.name!r}; select it under a distinct alias inside the "
+            "join's sources")
+    return e if e.table == alias else type(e)(e.name, alias)
+
+
+def _expand_star(e: Expr, targets: dict) -> List[Expr]:
+    """``c.*`` over a claimed join: the columns ``c`` contributes, under
+    the join's one alias (unchanged when they are not known)."""
+    hit = (isinstance(e, Star) and e.table and not e.replace
+           and not e.exclude and targets.get(e.table.lower()))
+    if not hit or hit[2] is None:
+        return [e]
+    return [_repoint(Col(n, e.table), targets) for n in hit[2]]
+
+
+def _map_exprs(p, fn):
+    """Copy of the plan node or subquery expression ``p`` with every
+    expression it holds rewritten top-down by ``fn`` (``fn`` returning
+    a new node stops the descent there); plan inputs are left as they
+    are."""
+    from .compiler import _rewrite_expr
+    updates = {}
+    for f in dataclasses.fields(p):
+        v = getattr(p, f.name)
+        if isinstance(v, Expr):
+            nv = _rewrite_expr(v, fn)
+        elif isinstance(v, (list, tuple)) and any(
+                isinstance(x, Expr) for x in v):
+            nv = type(v)(_rewrite_expr(x, fn) if isinstance(x, Expr)
+                         else x for x in v)
+        else:
+            continue
+        updates[f.name] = nv
+    return dataclasses.replace(p, **updates) if updates else p
 
 
 def _reject_star_over_asof(plan: Plan) -> None:

@@ -9,7 +9,10 @@ struct_cast,intervals_cast}.rs.
 Spark-first re-expression: a single ``select`` of cast/from_json/
 to_timestamp columns appended right after the remote read. This is a
 narrow projection, stays entirely JVM-side (whole-stage codegen), and adds
-no shuffle — the right shape at any scale.
+no shuffle — the right shape at any scale. The compiler appends it only
+when the remote result differs from the expected schema in a column name
+or type (``compiler._cast_changes``); a result that already matches, as a
+strongly typed Arrow remote's usually does, is used as it is.
 
 Covered (SURVEY.md §2A):
 - positional arity check, errors on column-count mismatch

@@ -18,24 +18,34 @@ rules.
 
 The engine's ``Compiler`` is the one caller, in its own session and
 through its own ``SchemaCache``, for each federated node but a
-whole-table read.
+whole-table read. The cache is keyed on the claimed plan's shape
+(``plan_shape``): the plan with every literal inside a WHERE, HAVING or
+QUALIFY predicate or a join's ON condition masked, since predicates
+never change a node's output schema. Ad-hoc queries that differ only in
+those literals share one analysis; every other literal (projections,
+function arguments, frame bounds) stays in the key, because it can
+decide a column's name or type.
 """
 
 from __future__ import annotations
 
 from contextlib import contextmanager
+from dataclasses import fields, is_dataclass
 from typing import Any, Optional
 
 from .compiler import Compiler
-from .plans.nodes import RemoteQueryNode, Scan
+from .expressions import Expr, IntervalLit, Lit, Negative
+from .plans.nodes import Filter, Join, Plan, RemoteQueryNode, Scan
 from .sources.provider import SchemaCache, empty_dataframe
 
 
-def infer_plan_schema(spark, plan, cache: SchemaCache, key) -> Optional[Any]:
+def infer_plan_schema(spark, plan, cache: SchemaCache,
+                      executor) -> Optional[Any]:
     """Output schema of a plan as a pyspark StructType, or None when
     inference is impossible (a scan with no registered schema, or a
     construct Catalyst refuses, e.g. a DuckDB-only function); a failure
     is counted on ``cache`` and the query runs uncast."""
+    key = (executor, plan_shape(plan))
     schema = cache.get(key)
     if schema is not None:
         return schema
@@ -48,6 +58,31 @@ def infer_plan_schema(spark, plan, cache: SchemaCache, key) -> Optional[Any]:
         return None
     cache[key] = schema
     return schema
+
+
+#: the field of each node whose expression only filters rows
+_PREDICATE_FIELD = {Filter: "predicate", Join: "condition"}
+
+
+def plan_shape(node, masked: bool = False) -> str:
+    """Structural repr of a plan in which the value of every literal
+    (negated or not) under a ``Filter.predicate`` or a
+    ``Join.condition`` is one placeholder. Everything else renders
+    verbatim: ``SELECT 5`` is named after its value, and ``round(d, 1)``
+    and ``round(d, 2)`` differ in decimal scale."""
+    literal = node.expr if isinstance(node, Negative) else node
+    if masked and isinstance(literal, (Lit, IntervalLit)):
+        return "?"
+    if isinstance(node, (Plan, Expr)) and is_dataclass(node):
+        pred = _PREDICATE_FIELD.get(type(node))
+        parts = []
+        for f in fields(node):
+            m = masked or f.name == pred
+            parts.append(f"{f.name}={plan_shape(getattr(node, f.name), m)}")
+        return f"{type(node).__name__}({', '.join(parts)})"
+    if isinstance(node, (list, tuple)):
+        return "[" + ", ".join(plan_shape(x, masked) for x in node) + "]"
+    return repr(node)
 
 
 @contextmanager

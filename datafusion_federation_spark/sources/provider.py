@@ -56,8 +56,10 @@ class LRU(OrderedDict):
 
 
 class SchemaCache(LRU):
-    """Inferred schemas keyed ``(executor, base_sql)``: executors hash by
-    identity, so same-named databases never share one. Counts failures."""
+    """Inferred schemas keyed ``(executor, schema_infer.plan_shape(plan))``:
+    executors hash by identity, so same-named databases never share one,
+    and claimed plans differing only in predicate literals share one
+    entry. Counts failures."""
 
     failures = 0
     last_failure: Optional[str] = None
