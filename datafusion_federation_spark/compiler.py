@@ -31,7 +31,11 @@ from .plans.nodes import (
 )
 from .federation import absorbed_relations
 from .schema_cast import cast_dataframe
-from .sources.provider import LRU, SchemaCache
+from .sources.provider import LRU, SchemaCache, empty_dataframe
+
+#: a federated result the executor's statistics() puts at or below this
+#: many rows is hinted for broadcast
+BROADCAST_THRESHOLD_ROWS = 1_000_000
 
 _JOIN_HOW = {
     "inner": "inner", "left": "left", "right": "right", "full": "outer",
@@ -41,10 +45,8 @@ _JOIN_HOW = {
 
 class Compiler:
     def __init__(self, spark: SparkSession,
-                 broadcast_threshold_rows: int = 1_000_000,
                  runtime_join_filters: bool = False):
         self.spark = spark
-        self.broadcast_threshold_rows = broadcast_threshold_rows
         #: implicit-PIVOT discovery cap (r10): mirrors Spark's own
         #: spark.sql.pivotMaxValues default — the two-phase pre-query
         #: refuses loudly above it instead of building a 100k-column
@@ -70,11 +72,8 @@ class Compiler:
         #: small extra job on the local side, saves shipping the
         #: unfiltered remote table
         self.runtime_join_filters = runtime_join_filters
-        #: one-shot reuse of DataFrames compiled during runtime-filter
-        #: probing: the min/max probe already compiled the non-remote
-        #: join input, and compiling it again would re-fire any remote
-        #: sub-queries inside it (and re-plan the whole subtree)
-        self._probe_reuse: dict = {}
+        #: set for the duration of compile(plan_only=True)
+        self._plan_only = False
         #: WITH RECURSIVE state: name -> working-table DataFrame during a
         #: fixpoint run, and id(node) -> result for repeated references
         self._recursive_work: dict = {}
@@ -90,14 +89,18 @@ class Compiler:
         self.fixpoint_runs = 0
 
     # ------------------------------------------------------------------
-    def compile(self, plan: Plan) -> DataFrame:
+    def compile(self, plan: Plan, plan_only: bool = False) -> DataFrame:
+        """``plan_only`` builds the frame without running remote SQL:
+        each federated node whose schema is known compiles to an empty
+        frame of that schema (for explain)."""
+        self._plan_only = plan_only
         try:
             return self._c(plan)
         finally:
-            # a probe failure mid-compile must not leave stale id()-keyed
+            # a failure mid-compile must not leave stale id()-keyed
             # entries behind: a later plan node allocated at the same
             # address would silently reuse the wrong DataFrame
-            self._probe_reuse.clear()
+            self._plan_only = False
             self._recursive_results.clear()
             self._static_reuse.clear()
 
@@ -110,11 +113,37 @@ class Compiler:
         return schema_infer.infer_plan_schema(
             self.spark, p.plan, self._schema_cache, p.provider.executor)
 
+    def _read_remote(self, p: RemoteQueryNode, schema) -> DataFrame:
+        ex = p.provider.executor
+        sql = ex.apply_runtime_filters(p.sql, p.runtime_filters)
+        df = ex.execute(self.spark, sql, schema=schema)
+        if schema is not None and _cast_changes(df.schema, schema):
+            # SchemaCastScanExec analog: cast the remote result to the
+            # plan's expected schema right after the read, unless the
+            # remote already returned its names and types.
+            df = cast_dataframe(df, schema)
+        # statistics-driven broadcast posture: a known-small federated
+        # result is a broadcast candidate for downstream joins
+        # (reference statistics hook, src/sql/executor.rs:61-63).
+        # statistics() is a CHEAP hook — the row count of the result
+        # just read, or a catalog/planner estimate for executors whose
+        # rows never reach the driver; it never re-runs the query. It
+        # is asked about the SQL that ran, runtime filters included.
+        est = ex.statistics(sql)
+        if est is not None:
+            # executors whose hook reports an ESTIMATE declare
+            # statistics_is_estimate; the 2x lag-safety margin is
+            # applied HERE at the threshold comparison — an inflated
+            # figure can only SUPPRESS the hint — while every other
+            # statistics() reader sees the raw value.
+            if getattr(ex, "statistics_is_estimate", False):
+                est *= 2
+            if est <= BROADCAST_THRESHOLD_ROWS:
+                df = F.broadcast(df)
+        return df
+
     # ------------------------------------------------------------------
     def _c(self, p: Plan) -> DataFrame:
-        reused = self._probe_reuse.pop(id(p), None)
-        if reused is not None:
-            return reused
         pinned = self._static_reuse.get(id(p))
         if pinned is not None:
             return pinned
@@ -125,36 +154,11 @@ class Compiler:
             return self._c(p.input)
 
         if isinstance(p, RemoteQueryNode):
-            sql = p.provider.executor.apply_runtime_filters(
-                p.sql, p.runtime_filters)
             schema = self._remote_schema(p)
-            df = p.provider.executor.execute(self.spark, sql,
-                                             schema=schema)
-            if schema is not None and _cast_changes(df.schema, schema):
-                # SchemaCastScanExec analog: cast the remote result to the
-                # plan's expected schema right after the read, unless the
-                # remote already returned its names and types.
-                df = cast_dataframe(df, schema)
-            # statistics-driven broadcast posture: a known-small federated
-            # result is a broadcast candidate for downstream joins
-            # (reference statistics hook, src/sql/executor.rs:61-63).
-            # statistics() is a CHEAP hook (cache / catalog estimate) — it
-            # must never re-execute the federated query; the reference
-            # fetches it as an optional async hint, never by re-running
-            # the plan.
-            est = p.provider.executor.statistics(p.sql)
-            if est is not None:
-                # r12 (ADVICE r11 #4): executors whose hook reports a
-                # catalog ESTIMATE (not an exact cached count) declare
-                # statistics_is_estimate; the 2x lag-safety margin is
-                # applied HERE at the threshold comparison — an
-                # inflated figure can only SUPPRESS the hint — while
-                # every other statistics() reader sees the raw value.
-                if getattr(p.provider.executor,
-                           "statistics_is_estimate", False):
-                    est *= 2
-                if est <= self.broadcast_threshold_rows:
-                    df = F.broadcast(df)
+            if self._plan_only and schema is not None:
+                df = empty_dataframe(self.spark, schema)
+            else:
+                df = self._read_remote(p, schema)
             # the claimed sub-plan's qualifiers were absorbed into the
             # remote SQL; re-apply the first on the DataFrame so local
             # parents (joins above the federation cut) can still qualify
@@ -265,10 +269,11 @@ class Compiler:
             return self._compile_lateral(p)
 
         if isinstance(p, Join):
+            left = right = None
             if self.runtime_join_filters and p.how in ("inner", "semi"):
-                p = self._push_runtime_join_filter(p)
-            left = self._c(p.left)
-            right = self._c(p.right)
+                p, left, right = self._push_runtime_join_filter(p)
+            left = self._c(p.left) if left is None else left
+            right = self._c(p.right) if right is None else right
             how = _JOIN_HOW[p.how]
             if p.how == "cross":
                 return left.crossJoin(right)
@@ -1625,43 +1630,44 @@ class Compiler:
             out = out.alias(p.left.alias)
         return out
 
-    def _push_runtime_join_filter(self, p: Join) -> Join:
+    def _push_runtime_join_filter(self, p: Join):
         """For an equi-join with exactly one federated input, bound the
         remote side by the other side's join-key min/max before the
         remote SQL executes. Only inner/semi joins (filtering a
-        preserved outer side would drop null-extended rows)."""
+        preserved outer side would drop null-extended rows).
+
+        Returns ``(join, left_df, right_df)``: the side the probe
+        compiled comes back compiled, the other as None. Compiling the
+        probe side again would re-fire any remote sub-queries inside it
+        (and re-plan the whole subtree)."""
         from .expressions import BinaryOp, Col
         cond = p.condition
         if not (isinstance(cond, BinaryOp) and cond.op == "="
                 and isinstance(cond.left, Col)
                 and isinstance(cond.right, Col)):
-            return p
+            return p, None, None
         sides = {"left": p.left, "right": p.right}
         remote_side = None
         for name, side in sides.items():
             if isinstance(side, RemoteQueryNode):
                 if remote_side is not None:
-                    return p          # both remote: nothing local to probe
+                    return p, None, None   # both remote: nothing to probe
                 remote_side = name
         if remote_side is None:
-            return p
+            return p, None, None
         remote = sides[remote_side]
         other = sides["left" if remote_side == "right" else "right"]
         rcols = _plan_output_cols(remote.plan)
         if rcols is None:
-            return p
+            return p, None, None
         if cond.left.name in rcols and cond.right.name not in rcols:
             rcol, ocol = cond.left.name, cond.right.name
         elif cond.right.name in rcols and cond.left.name not in rcols:
             rcol, ocol = cond.right.name, cond.left.name
         else:
-            return p
+            return p, None, None
+        # the bounds job scans only the pruned key column
         other_df = self._c(other)
-        # the Join branch will compile `other` again right after this
-        # returns — hand it the already-compiled frame (one compile, one
-        # remote execution of any federated node inside the probe side;
-        # the bounds job itself scans only the pruned key column)
-        self._probe_reuse[id(other)] = other_df
         row = other_df.agg(F.min(ocol).alias("lo"),
                            F.max(ocol).alias("hi")).collect()[0]
         d = remote.provider.dialect
@@ -1672,8 +1678,10 @@ class Compiler:
                        f"{d.quote(rcol)} <= {d.literal(row['hi'])}"]
         bounded = remote.with_runtime_filters(filters)
         if remote_side == "left":
-            return Join(bounded, p.right, p.how, p.condition, p.using)
-        return Join(p.left, bounded, p.how, p.condition, p.using)
+            return (Join(bounded, p.right, p.how, p.condition, p.using),
+                    None, other_df)
+        return (Join(p.left, bounded, p.how, p.condition, p.using),
+                other_df, None)
 
     @staticmethod
     def _expand_star_options(df: DataFrame, projections):

@@ -20,10 +20,10 @@ from pyspark.sql import DataFrame, SparkSession
 
 from .compiler import Compiler
 from .expressions import (
-    AggFunc, Alias, Col, Cube, Expr, GroupingSets, Rollup, SortKey, Star,
+    AggFunc, Alias, Col, Cube, Expr, GroupingSets, Rollup, SortKey,
     _wrap, col, lit,
 )
-from .federation import federate
+from .federation import _is_star_shell, federate
 from .plans.nodes import (
     Aggregate, Distinct, Filter, Join, Limit, Plan, Project, RemoteQueryNode,
     Scan, SetOp, Sort, SubqueryAlias, Union, Window, walk_plan,
@@ -324,11 +324,7 @@ class FederationEngine:
         """Look through wrap_projection's SELECT-* shell: a fully
         claimed plan is a RemoteQueryNode, possibly under Project(*)."""
         core = fed
-        while (isinstance(core, Project) and len(core.projections) == 1
-               and isinstance(core.projections[0], Star)
-               and core.projections[0].table is None
-               and not core.projections[0].replace
-               and not core.projections[0].exclude):
+        while _is_star_shell(core):
             core = core.input
         return core
 
@@ -566,9 +562,12 @@ class FederationEngine:
         """Staged explain like the reference's EXPLAIN output
         (src/sql/mod.rs:303-368): which subtrees federated, the base and
         rewritten SQL per federated node, and Spark's physical plan for
-        the residue. ``analyze=True`` also executes the plan and reports
-        row count + wall time (AnalyzeExec analog; the Analyze wrapper
-        itself is never federated — src/optimizer/mod.rs:194-209)."""
+        the residue. Plain explain runs no remote SQL: each federated
+        node plans as an empty frame of its inferred schema (a node whose
+        schema cannot be inferred still runs). ``analyze=True`` executes
+        the plan and reports row count + wall time (AnalyzeExec analog;
+        the Analyze wrapper itself is never federated —
+        src/optimizer/mod.rs:194-209)."""
         from .plans.nodes import Analyze
         if isinstance(plan, Analyze):
             plan, analyze = plan.input, True
@@ -581,7 +580,7 @@ class FederationEngine:
                 if n.base_sql and n.base_sql != n.sql:
                     lines.append(f"   base_sql      = {n.base_sql}")
                 lines.append(f"   rewritten_sql = {n.sql}")
-        df = self.compiler.compile(fed)
+        df = self.compiler.compile(fed, plan_only=not analyze)
         lines.append("== Spark physical plan (local residue) ==")
         lines.append(df._jdf.queryExecution().explainString(
             self.spark._jvm.org.apache.spark.sql.execution

@@ -246,7 +246,7 @@ def federate(plan: Plan) -> Plan:
     _reject_star_over_asof(plan)
     plan = push_filters(plan)
     plan = prune_scans(plan)
-    new_plan, _ = _optimize_recursively(plan, is_root=True, memo={})
+    new_plan, _ = _optimize_recursively(plan, memo={})
     return requalify(new_plan)
 
 
@@ -438,10 +438,10 @@ def _reject_star_over_asof(plan: Plan) -> None:
                 "'<ts>_right')")
 
 
-def _optimize_recursively(plan: Plan, is_root: bool,
+def _optimize_recursively(plan: Plan,
                           memo: Optional[dict] = None) -> Tuple[Plan, bool]:
-    """``memo`` maps id(node) -> (rewritten, changed) for the is_root=True
-    walk so SHARED plan nodes (a WITH RECURSIVE CTE referenced twice
+    """``memo`` maps id(node) -> (rewritten, changed) for the walk so
+    SHARED plan nodes (a WITH RECURSIVE CTE referenced twice
     resolves to ONE RecursiveCTE object) stay shared after federation
     rewrites — the compiler's id()-keyed fixpoint/static-reuse caches
     depend on it; without this a shared federated subtree splits into two
@@ -458,8 +458,7 @@ def _optimize_recursively(plan: Plan, is_root: bool,
         # EXPLAIN ANALYZE is never federated as a whole — the unparser
         # cannot emit it; only the inner query federates (reference
         # src/optimizer/mod.rs:194-209, test src/sql/mod.rs:772-818).
-        new_input, changed = _optimize_recursively(plan.input, is_root=True,
-                                                   memo=memo)
+        new_input, changed = _optimize_recursively(plan.input, memo=memo)
         out = (plan.with_inputs([new_input]) if changed else plan), changed
         memo[id(plan)] = out
         return out
@@ -469,27 +468,19 @@ def _optimize_recursively(plan: Plan, is_root: bool,
     res = scan_plan(plan)
 
     if res.is_distinct() and res.provider.can_federate():
-        if is_root:
-            try:
-                # whole plan belongs to one federatable provider
-                out = _claim(res.provider, plan), True
-                memo[id(plan)] = out
-                return out
-            except UnsupportedUnparse:
-                # the dialect cannot express this plan's root operators
-                # (e.g. * EXCEPT on an engine without the syntax and
-                # unknown columns): fall through and federate the
-                # largest subtrees the unparser CAN express — the
-                # residue compiles locally. This mirrors DataFusion
-                # only claiming plans its unparser supports.
-                pass
-        else:
-            # not root: parent decides; signal "federatable as a whole".
-            # (With the current call sites this branch is only reachable
-            # via Analyze inputs — children are pre-checked by the parent
-            # loop — but it keeps the recursion faithful to the
-            # reference's shape.)
-            return plan, False
+        try:
+            # whole plan belongs to one federatable provider
+            out = _claim(res.provider, plan), True
+            memo[id(plan)] = out
+            return out
+        except UnsupportedUnparse:
+            # the dialect cannot express this plan's root operators
+            # (e.g. * EXCEPT on an engine without the syntax and
+            # unknown columns): fall through and federate the largest
+            # subtrees the unparser CAN express — the residue compiles
+            # locally. This mirrors DataFusion only claiming plans its
+            # unparser supports.
+            pass
 
     # mixed/ambiguous node: federate each maximal single-provider input
     new_inputs = []
@@ -510,7 +501,7 @@ def _optimize_recursively(plan: Plan, is_root: bool,
                 continue
             except UnsupportedUnparse:
                 pass        # claim smaller pieces of this child instead
-        new_child, ch = _optimize_recursively(child, is_root=True, memo=memo)
+        new_child, ch = _optimize_recursively(child, memo=memo)
         new_inputs.append(new_child)
         changed = changed or ch
     # subquery expressions federate independently as their own roots

@@ -254,11 +254,8 @@ def _push_one(p: Plan, c: Expr) -> Optional[Plan]:
         # push through only when every referenced name maps to a PLAIN
         # column of the input (alias-of-Col or passthrough Col); a lone
         # unqualified Star passes everything through unchanged
-        if (len(p.projections) == 1
-                and isinstance(p.projections[0], Star)
-                and p.projections[0].table is None
-                and not p.projections[0].replace
-                and not p.projections[0].exclude):
+        from .federation import _is_star_shell
+        if _is_star_shell(p):
             return Project(Filter(p.input, c), p.projections)
         mapping = {}
         for e in p.projections:

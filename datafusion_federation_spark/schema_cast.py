@@ -21,6 +21,7 @@ Covered (SURVEY.md §2A):
 - JSON string -> ArrayType (lists_cast.rs:197-517) incl. fixed-size check
 - JSON string -> StructType (struct_cast.rs:12-55)
 - interval narrowing with lossy-value errors (intervals_cast.rs:11-75)
+- anything -> NullType (a bare ``NULL`` column) as a NULL literal
 - everything else -> generic cast (record_convert.rs:121-123)
 """
 
@@ -68,6 +69,10 @@ def cast_column(col: Column, src: T.DataType, dst: T.DataType) -> Column:
     """Per-column dispatch (try_cast_to analog, record_convert.rs:51-130)."""
     if src == dst:
         return col
+    if isinstance(dst, T.NullType):
+        # a bare NULL projection: no source type casts to VOID, and
+        # every value of the column is NULL anyway
+        return F.lit(None)
     if isinstance(src, T.StringType):
         if isinstance(dst, T.TimestampType):
             return F.to_timestamp(col)

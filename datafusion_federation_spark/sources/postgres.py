@@ -9,14 +9,18 @@ predicate, write-back DML, window/grouping-set/set-op SQL) now
 executes against a REAL PostgreSQL engine in tests and in the q127
 oracle row.
 
-Two pieces:
+Three pieces:
 
 - ``PostgresExecutor`` — the ``SQLExecutor`` contract (reference
   src/sql/executor.rs:19-75) over one libpq connection: text-protocol
   results typed by column OID into an Arrow table (the same
   columnar entry path as DuckDB results), DML via PQexec +
   PQcmdTuples, schema discovery via information_schema / LIMIT 0
-  OIDs, and an EXPLAIN-based row estimate for the broadcast hint.
+  OIDs. The broadcast hint reads the row counts of results already
+  fetched (``SQLExecutor.statistics``); no statistics query is sent.
+- ``PartitionedPostgresExecutor`` — the shared hash-slice reader
+  (sources/partitioned.py) over per-task libpq connections; its rows
+  never reach the driver, so its hint is an EXPLAIN row estimate.
 - ``EphemeralPostgres`` — an initdb'd single-user cluster on a
   private Unix socket (no TCP, no port conflicts), run through
   ``su postgres`` when the process is root (PostgreSQL refuses
@@ -41,6 +45,9 @@ import tempfile
 import uuid
 from typing import Any, Callable, Dict, List, Optional, Tuple
 
+from pyspark.sql import types as T
+
+from .partitioned import SliceReadExecutor
 from .provider import SQLExecutor, arrow_to_spark, empty_dataframe
 
 # -- libpq via ctypes -------------------------------------------------------
@@ -125,10 +132,17 @@ def _oid_map():
     }
 
 
-_OID_SPARK = {16: "boolean", 20: "bigint", 21: "smallint", 23: "int",
-              700: "float", 701: "double", 1082: "date",
-              1114: "timestamp", 1184: "timestamp", 17: "binary",
-              1700: "decimal(38,9)"}
+#: OID -> Spark type of a column; any other OID reads as a string
+_OID_SPARK = {16: T.BooleanType(), 20: T.LongType(), 21: T.ShortType(),
+              23: T.IntegerType(), 700: T.FloatType(),
+              701: T.DoubleType(), 1082: T.DateType(),
+              1114: T.TimestampType(), 1184: T.TimestampType(),
+              17: T.BinaryType(), 1700: T.DecimalType(38, 9)}
+
+
+def _pg_schema(names, oids) -> T.StructType:
+    return T.StructType([T.StructField(n, _OID_SPARK.get(o, T.StringType()))
+                         for n, o in zip(names, oids)])
 
 
 class PostgresConnection:
@@ -253,27 +267,18 @@ class PostgresExecutor(SQLExecutor):
         return list(cols[0]) if cols else []
 
     def get_table_schema(self, spark, table_name: str):
-        from pyspark.sql import types as T
-        spark_types = {
-            "boolean": T.BooleanType(), "bigint": T.LongType(),
-            "smallint": T.ShortType(), "int": T.IntegerType(),
-            "float": T.FloatType(), "double": T.DoubleType(),
-            "date": T.DateType(), "timestamp": T.TimestampType(),
-            "binary": T.BinaryType(), "string": T.StringType(),
-            "decimal(38,9)": T.DecimalType(38, 9)}
         q = table_name.replace('"', '""')
         names, oids, _ = self.conn.query(
             f'SELECT * FROM "{q}" LIMIT 0')
-        return T.StructType([
-            T.StructField(n, spark_types[_OID_SPARK.get(o, "string")])
-            for n, o in zip(names, oids)])
+        return _pg_schema(names, oids)
 
     # -- DML ---------------------------------------------------------------
     def execute_statement(self, spark, sql: str) -> Optional[int]:
         import time as _time
         t0 = _time.time()
         n = self.conn.command(sql)
-        self._record(sql, _time.time() - t0, n)
+        self._record(sql, _time.time() - t0)
+        self._row_cache.clear()
         return n
 
     def insert(self, spark, df, table_ref, mode: str = "append",
@@ -302,23 +307,8 @@ class PostgresExecutor(SQLExecutor):
         if buf:
             total += self.conn.command(
                 f"INSERT INTO {tbl} VALUES " + ", ".join(buf)) or 0
+        self._row_cache.clear()
         return total
-
-    # -- optional hooks ----------------------------------------------------
-    def statistics(self, sql: str) -> Optional[int]:
-        """Planner row ESTIMATE via EXPLAIN (FORMAT JSON) — feeds the
-        estimate-aware broadcast threshold (the 2x lag margin applies
-        at the comparison site, sources/partitioned.py posture)."""
-        import json
-        try:
-            _, _, cols = self.conn.query(
-                f"EXPLAIN (FORMAT JSON) {sql}")
-            plan = json.loads(cols[0][0])
-            return int(plan[0]["Plan"]["Plan Rows"])
-        except Exception:
-            return None
-
-    statistics_is_estimate = True
 
 
 # -- ephemeral server for tests / the q127 oracle row -----------------------
@@ -435,106 +425,64 @@ class EphemeralPostgres:
 def read_postgres_partitioned(spark, conninfo: str, sql: str,
                               split_col: str, n_slices: int = 16,
                               batch_rows: int = 65536):
-    """Distributed read of ``sql`` from PostgreSQL: the query runs
-    ``n_slices`` times, once per Spark TASK, each keeping only its
-    hash slice of ``split_col`` — results land on the executors,
-    never the driver (the partitioned.py slice pattern, here with
-    per-task libpq connections and server-side cursors so a slice
-    streams in ``batch_rows`` chunks instead of one PQexec buffer).
+    """``read_slices`` (sources/partitioned.py) over PostgreSQL: each
+    task opens its own libpq connection and streams its slice through a
+    server-side cursor in ``batch_rows`` chunks instead of one PQexec
+    buffer.
 
         slice i of N: WHERE (coalesce(hashtext(CAST(col AS text)), 0)
                              % N + N) % N = i
 
-    The double-mod keeps PostgreSQL's signed hashtext non-negative;
-    coalesce pins NULL split keys to slice 0 instead of dropping them
-    (the classic range-partitioning bug). The driver runs only
-    LIMIT 0 for the schema. Same soundness contract as the DuckDB
-    slice reader: any LIMIT or top-level ORDER BY degrades to ONE
-    slice (re-executing per slice could pick different rows / the
-    union destroys the order); a ``split_col`` absent from the result
-    degrades to one slice, never silent row loss. ``conninfo`` must
-    be reachable from executor hosts — a Unix-socket conninfo only
-    works in local mode; use TCP on a real cluster."""
-    import re
+    coalesce pins NULL split keys to slice 0 instead of dropping them.
+    ``conninfo`` must be reachable from executor hosts — a Unix-socket
+    conninfo only works in local mode; use TCP on a real cluster."""
+    from .partitioned import read_slices
 
-    from pyspark.sql import functions as F
-    from pyspark.sql import types as T
+    def probe(q):
+        boot = PostgresConnection(conninfo)
+        try:
+            names, oids, _ = boot.query(
+                f"SELECT * FROM ({q}) __fed_schema LIMIT 0")
+        finally:
+            boot.close()
+        return _pg_schema(names, oids)
 
-    if n_slices < 1:
-        raise ValueError(f"n_slices must be >= 1, got {n_slices}")
-    boot = PostgresConnection(conninfo)
-    try:
-        names, oids, _ = boot.query(
-            f"SELECT * FROM ({sql}) __fed_schema LIMIT 0")
-    finally:
-        boot.close()
-    spark_types = {
-        16: T.BooleanType(), 20: T.LongType(), 21: T.ShortType(),
-        23: T.IntegerType(), 700: T.FloatType(), 701: T.DoubleType(),
-        1082: T.DateType(), 1114: T.TimestampType(),
-        1184: T.TimestampType(), 17: T.BinaryType(),
-        1700: T.DecimalType(38, 9)}
-    schema = T.StructType([
-        T.StructField(n, spark_types.get(o, T.StringType()))
-        for n, o in zip(names, oids)])
-    if split_col not in names:
-        n_slices = 1
-    if re.search(r"\blimit\b", sql, re.IGNORECASE) \
-            or re.search(r"\border\s+by\b", sql, re.IGNORECASE):
-        n_slices = 1
-
-    # PostgresConnection.query already types values by OID; NUMERIC
-    # (no Arrow-native width) comes back as text — convert to Decimal
-    # in the task so the DecimalType(38,9) schema holds
-    numeric_cols = [n for n, o in zip(names, oids) if o == 1700]
-    qcol = '"' + split_col.replace('"', '""') + '"'
-
-    def _slice_sql(i: int) -> str:
-        if n_slices == 1:
-            return sql
-        return (f"SELECT * FROM ({sql}) __fed_part WHERE "
-                f"(coalesce(hashtext(CAST({qcol} AS text)), 0) "
-                f"% {n_slices} + {n_slices}) % {n_slices} = {i}")
-
-    def run_slices(batches):
+    def fetch(q):
         import decimal as _dec
 
         import pandas as pd
-        for pdf in batches:
-            for i in pdf["__slice"]:
-                conn = PostgresConnection(conninfo)
-                try:
-                    conn.command("BEGIN")
-                    conn.command(
-                        f"DECLARE __fed_cur NO SCROLL CURSOR FOR "
-                        f"{_slice_sql(int(i))}")
-                    while True:
-                        fnames, _, cols = conn.query(
-                            f"FETCH FORWARD {batch_rows} "
-                            f"FROM __fed_cur")
-                        if not cols or not cols[0]:
-                            break
-                        data = {}
-                        for n, c in zip(fnames, cols):
-                            if n in numeric_cols:
-                                c = [None if v is None
-                                     else _dec.Decimal(v) for v in c]
-                            data[n] = pd.Series(c, dtype="object")
-                        yield pd.DataFrame(data)
-                        if len(cols[0]) < batch_rows:
-                            break
-                    conn.command("COMMIT")
-                finally:
-                    conn.close()
+        conn = PostgresConnection(conninfo)
+        try:
+            conn.command("BEGIN")
+            conn.command(f"DECLARE __fed_cur NO SCROLL CURSOR FOR {q}")
+            while True:
+                fnames, oids, cols = conn.query(
+                    f"FETCH FORWARD {batch_rows} FROM __fed_cur")
+                if not cols or not cols[0]:
+                    break
+                # query() types values by OID; NUMERIC (no Arrow-native
+                # width) comes back as text — Decimal holds the
+                # DecimalType(38,9) schema
+                data = {}
+                for n, o, c in zip(fnames, oids, cols):
+                    if o == 1700:
+                        c = [None if v is None else _dec.Decimal(v)
+                             for v in c]
+                    data[n] = pd.Series(c, dtype="object")
+                yield pd.DataFrame(data)
+                if len(cols[0]) < batch_rows:
+                    break
+            conn.command("COMMIT")
+        finally:
+            conn.close()
 
-    # one slice id per partition EXACTLY, no shuffle (hash-repartition
-    # would collide slices: ~1/e of tasks empty, stragglers serial)
-    slices = spark.range(0, n_slices, 1, numPartitions=n_slices) \
-        .select(F.col("id").cast("int").alias("__slice"))
-    return slices.mapInPandas(run_slices, schema=schema)
+    qcol = '"' + split_col.replace('"', '""') + '"'
+    return read_slices(
+        spark, sql, split_col, n_slices, probe, fetch,
+        key_hash=f"coalesce(hashtext(CAST({qcol} AS text)), 0)")
 
 
-class PartitionedPostgresExecutor(PostgresExecutor):
+class PartitionedPostgresExecutor(SliceReadExecutor, PostgresExecutor):
     """PostgresExecutor whose ``execute`` runs the distributed slice
     read instead of a driver-side fetch — per-TASK libpq connections,
     server-side cursors, results landing on executors. For large
@@ -553,14 +501,22 @@ class PartitionedPostgresExecutor(PostgresExecutor):
         self.split_col = split_col
         self.n_slices = n_slices
 
-    def execute(self, spark, sql: str, schema=None):
-        import time as _time
-        t0 = _time.time()
-        df = read_postgres_partitioned(
+    def _read_slices(self, spark, sql: str):
+        return read_postgres_partitioned(
             spark, self.conninfo, sql, self.split_col, self.n_slices)
-        # plan-construction time only: slices run lazily inside tasks
-        self._record(sql, _time.time() - t0)
-        return df
+
+    def statistics(self, sql: str) -> Optional[int]:
+        """Planner row ESTIMATE via EXPLAIN (FORMAT JSON): the slice
+        rows never reach the driver, so no exact count is ever known
+        here. One EXPLAIN round trip per call."""
+        import json
+        try:
+            _, _, cols = self.conn.query(
+                f"EXPLAIN (FORMAT JSON) {sql}")
+            plan = json.loads(cols[0][0])
+            return int(plan[0]["Plan"]["Plan Rows"])
+        except Exception:
+            return None
 
 
 def load_parquet_into_postgres(ex: PostgresExecutor, table: str,

@@ -81,6 +81,16 @@ def empty_dataframe(spark, schema):
     return spark.sql(f"SELECT {cols} WHERE 1 = 0")
 
 
+def duckdb_schema(conn, relation: str):
+    """Spark schema of ``SELECT * FROM <relation> LIMIT 0`` on a DuckDB
+    connection: Arrow carries the types, so no row moves and no Spark
+    job runs, and an empty relation answers too (the reference's mock
+    infers via ``limit 1``, examples/shared/mod.rs:74-79)."""
+    from pyspark.sql.pandas.types import from_arrow_schema
+    return from_arrow_schema(conn.execute(
+        f"SELECT * FROM {relation} LIMIT 0").fetch_arrow_table().schema)
+
+
 def arrow_to_spark(spark, arrow, schema=None):
     """Arrow result table -> Spark DataFrame (shared by every executor
     that speaks Arrow on the wire). Non-empty results enter in native
@@ -191,24 +201,39 @@ class SQLExecutor:
             f"passthrough) instead")
 
     def statistics(self, sql: str) -> Optional[int]:
-        """Estimated row count for a federated query (default unknown)."""
-        return None
+        """Row count of ``sql`` if this executor already fetched its
+        result, else unknown. The reference fetches statistics as an
+        optional hint (src/sql/executor.rs:61-63), NEVER by re-executing
+        the plan: this answers from the counts ``_record`` keeps and
+        issues no remote work."""
+        return self._row_cache.get(sql)
 
+    # per-INSTANCE stores, created lazily (subclasses define their own
+    # __init__ and need not call super().__init__; a class-level dict
+    # here would be shared across executors)
     @property
     def _metrics(self) -> Dict[str, Any]:
-        # per-INSTANCE metrics store, created lazily (subclasses define
-        # their own __init__ and need not call super().__init__; a
-        # class-level dict here would be shared across executors)
         return self.__dict__.setdefault("_metrics_store", {})
+
+    @property
+    def _row_cache(self) -> LRU:
+        """Result row counts by SQL text; every write through this
+        executor clears it, since counts read before a write no longer
+        bound the table."""
+        return self.__dict__.setdefault("_row_cache_store", LRU())
 
     def metrics(self) -> Dict[str, Any]:
         return dict(self._metrics)
 
     def _record(self, sql: str, seconds: float, rows: Optional[int] = None):
+        """Count one remote round trip; ``rows`` is the result row count
+        of a read that reached the driver, kept for ``statistics``."""
         m = self._metrics
         m["queries"] = m.get("queries", 0) + 1
         m["elapsed_s"] = m.get("elapsed_s", 0.0) + seconds
         m["last_sql"] = sql
+        if rows is not None:
+            self._row_cache[sql] = rows
 
 
 class SQLProvider(FederationProvider):
@@ -255,22 +280,12 @@ def _expected_schema(plan):
     Spark: a whole-table shape reads the handle's registered schema.
     Every other shape returns None, and the engine's compiler infers it
     through Catalyst (``Compiler._remote_schema``, schema_infer)."""
-    from ..expressions import Star
-    from ..plans.nodes import Project, Scan, SubqueryAlias
+    from ..federation import _is_star_shell
+    from ..plans.nodes import Scan, SubqueryAlias
 
     node = plan
-    while True:
-        if isinstance(node, SubqueryAlias):
-            node = node.input
-            continue
-        if (isinstance(node, Project) and len(node.projections) == 1
-                and isinstance(node.projections[0], Star)
-                and node.projections[0].table is None
-                and not node.projections[0].replace
-                and not node.projections[0].exclude):
-            node = node.input
-            continue
-        break
+    while isinstance(node, SubqueryAlias) or _is_star_shell(node):
+        node = node.input
     if isinstance(node, Scan) and not node.projection:
         return node.table.schema
     return None
@@ -302,7 +317,6 @@ class DuckDBExecutor(SQLExecutor):
         self.compute_context = compute_context or database
         self.conn = duckdb.connect(database)
         self._tables: Dict[str, str] = {}
-        self._row_cache: LRU = LRU()
 
     def register_parquet(self, name: str, path: str):
         self.conn.execute(
@@ -320,16 +334,9 @@ class DuckDBExecutor(SQLExecutor):
         return list(self._tables)
 
     def get_table_schema(self, spark, table_name: str):
-        """Arrow schema of `SELECT * ... LIMIT 0` mapped to Spark types
-        directly — no Spark job, and works for empty remote tables (the
-        reference's mock infers via `limit 1`; LIMIT 0 is enough since
-        Arrow carries the types)."""
         t0 = time.time()
-        ref = ".".join(f'"{p}"' for p in table_name.split("."))
-        tbl = self.conn.execute(
-            f"SELECT * FROM {ref} LIMIT 0").fetch_arrow_table()
-        from pyspark.sql.pandas.types import from_arrow_schema
-        schema = from_arrow_schema(tbl.schema)
+        schema = duckdb_schema(
+            self.conn, ".".join(f'"{p}"' for p in table_name.split(".")))
         self._record(f"schema:{table_name}", time.time() - t0)
         return schema
 
@@ -343,15 +350,7 @@ class DuckDBExecutor(SQLExecutor):
         t0 = time.time()
         arrow = self.conn.execute(sql).fetch_arrow_table()
         self._record(sql, time.time() - t0, arrow.num_rows)
-        self._row_cache[sql] = arrow.num_rows
         return arrow_to_spark(spark, arrow, schema)
-
-    def statistics(self, sql: str) -> Optional[int]:
-        """Cheap statistics hook (reference src/sql/executor.rs:61-63
-        fetches these as an optional hint — NEVER by re-executing the
-        plan). We return the exact count if this SQL already ran on this
-        connection, else unknown; no remote work is ever issued here."""
-        return self._row_cache.get(sql)
 
     def insert(self, spark, df, table_ref, mode: str = "append"):
         """INSERT INTO passthrough: ship the DataFrame as one Arrow table
@@ -368,13 +367,12 @@ class DuckDBExecutor(SQLExecutor):
                 f'INSERT INTO "{name}" SELECT * FROM __fed_insert')
         finally:
             self.conn.unregister("__fed_insert")
-        self._row_cache.clear()     # cached counts no longer bound it
+        self._row_cache.clear()
         return arrow.num_rows
 
     def execute_statement(self, spark, sql: str):
         """Remote DML (r12 write-back): the statement runs wholly
-        inside DuckDB. Row-cached statistics are dropped — counts
-        cached before an INSERT no longer bound the table."""
+        inside DuckDB."""
         t0 = time.time()
         cur = self.conn.execute(sql)
         n = None
@@ -384,7 +382,7 @@ class DuckDBExecutor(SQLExecutor):
                 n = row[0]          # DuckDB reports a Count row
         except Exception:  # noqa: BLE001 - count is best-effort
             pass
-        self._record(sql, time.time() - t0, n)
+        self._record(sql, time.time() - t0)
         self._row_cache.clear()
         return n
 
@@ -398,9 +396,6 @@ _DISCOVERY_SQL = {
     "ansi": ("SELECT table_schema, table_name FROM "
              "information_schema.tables "
              "WHERE table_type IN ('BASE TABLE', 'VIEW')"),
-    "duckdb": ("SELECT table_schema, table_name FROM "
-               "information_schema.tables "
-               "WHERE table_type IN ('BASE TABLE', 'VIEW')"),
     "postgres": ("SELECT table_schema, table_name FROM "
                  "information_schema.tables "
                  "WHERE table_type IN ('BASE TABLE', 'VIEW') "
@@ -460,23 +455,19 @@ class JDBCExecutor(SQLExecutor):
     def _reader(self, spark, sql: str, partitioned: bool = True):
         r = (spark.read.format("jdbc")
              .option("url", self.url)
-             .option("query", sql)
              .option("fetchsize", str(self.fetchsize)))
-        for k, v in self.properties.items():
-            r = r.option(k, v)
         p = self.partitioning if partitioned else None
-        if p is not None:
-            # partitioned read: swap `query` for dbtable + bounds
-            r = (spark.read.format("jdbc")
-                 .option("url", self.url)
-                 .option("dbtable", f"({sql}) __fed_q")
+        if p is None:
+            r = r.option("query", sql)
+        else:
+            # partitioned read: dbtable + bounds instead of `query`
+            r = (r.option("dbtable", f"({sql}) __fed_q")
                  .option("partitionColumn", p.column)
                  .option("lowerBound", str(p.lower_bound))
                  .option("upperBound", str(p.upper_bound))
-                 .option("numPartitions", str(p.num_partitions))
-                 .option("fetchsize", str(self.fetchsize)))
-            for k, v in self.properties.items():
-                r = r.option(k, v)
+                 .option("numPartitions", str(p.num_partitions)))
+        for k, v in self.properties.items():
+            r = r.option(k, v)
         return r
 
     def execute(self, spark, sql: str, schema=None,
@@ -519,6 +510,7 @@ class JDBCExecutor(SQLExecutor):
         (df.write.mode(mode)
          .options(**self.properties)
          .jdbc(self.url, name))
+        self._row_cache.clear()
         return None
 
     def execute_statement(self, spark, sql: str):
@@ -542,7 +534,8 @@ class JDBCExecutor(SQLExecutor):
                 st.close()
         finally:
             conn.close()
-        self._record(sql, time.time() - t0, n)
+        self._record(sql, time.time() - t0)
+        self._row_cache.clear()
         return n
 
 
@@ -644,7 +637,8 @@ class SQLiteExecutor(SQLExecutor):
         cur = self.conn.execute(sql)
         self.conn.commit()
         n = cur.rowcount if cur.rowcount >= 0 else None
-        self._record(sql, time.time() - t0, n)
+        self._record(sql, time.time() - t0)
+        self._row_cache.clear()
         return n
 
 
@@ -738,4 +732,5 @@ class SparkSQLExecutor(SQLExecutor):
         t0 = time.time()
         self.remote.sql(sql).collect()    # DML: collect() forces it
         self._record(sql, time.time() - t0)
+        self._row_cache.clear()
         return None

@@ -651,7 +651,7 @@ class Parser:
         elif self.at_kw("UNPIVOT"):
             plan = self._parse_unpivot_statement(outer)
         else:
-            plan = self.parse_select(outer)
+            plan = self._parse_set_operand(outer)
         while self.at_kw("INTERSECT"):
             if getattr(self, "_pending_don", None) is not None:
                 raise SqlParseError(
@@ -659,8 +659,19 @@ class Parser:
                     "parser surface")
             self.take()
             allq = self.accept_kw("ALL")
-            rhs = self.parse_select(outer)
+            rhs = self._parse_set_operand(outer)
             plan = SetOp(plan, rhs, "INTERSECT", allq)
+        return plan
+
+    def _parse_set_operand(self, outer: _Scope) -> Plan:
+        """One branch of a set-operation chain: a SELECT, or a whole
+        parenthesized query (``a EXCEPT (b UNION c)``, ``(a LIMIT 3)
+        UNION b``) whose ORDER BY / LIMIT stay inside the parens."""
+        if self.peek() != ("op", "("):
+            return self.parse_select(outer)
+        self.take()
+        plan = self.parse_query(outer)
+        self.expect_op(")")
         return plan
 
     def _order_limit(self, plan: Plan, scope: _Scope) -> Plan:
@@ -791,6 +802,12 @@ class Parser:
                 nulls = False
         return SortKey(e, ascending=asc, nulls_first=nulls)
 
+    def _at_distinct_from(self) -> bool:
+        """Whether the FROM at the cursor ends ``IS [NOT] DISTINCT``."""
+        prev = [t[1].upper() if t[0] == "id" else None
+                for t in self.toks[max(self.i - 2, 0):self.i]]
+        return prev[-2:] in (["IS", "DISTINCT"], ["NOT", "DISTINCT"])
+
     # select_stmt := SELECT [DISTINCT] items FROM ... [WHERE] [GROUP BY]
     #                [HAVING]
     def parse_select(self, outer: _Scope) -> Plan:
@@ -820,7 +837,7 @@ class Parser:
                 depth -= 1
             elif depth == 0 and t[0] == "id":
                 u = t[1].upper()
-                if u == "FROM":
+                if u == "FROM" and not self._at_distinct_from():
                     i_from = self.i
                     break
                 if u in ("UNION", "EXCEPT", "INTERSECT"):

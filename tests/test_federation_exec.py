@@ -107,14 +107,80 @@ def test_engine_sql_front_door(duckdb_engine):
 
 
 def test_explain_shows_federated_sql(duckdb_engine):
-    eng, _ = duckdb_engine
+    eng, ex = duckdb_engine
     b = (eng.table("orders")
          .filter(BinaryOp(">", col("o_totalprice"), lit(0.0)))
          .select("o_orderkey"))
+    q0 = ex.metrics().get("queries", 0)
     out = b.explain()
     assert "Federated" in out
     assert "rewritten_sql" in out
     assert "o_orderkey" in out
+    assert ex.metrics().get("queries", 0) == q0, \
+        "plain explain must not run the remote query"
+
+
+def test_explain_mixed_plan_runs_no_remote_query(duckdb_engine):
+    """A remote dim joined to a local fact: plain explain plans the
+    federated leaf as an empty frame of its inferred schema, so the
+    remote engine sees nothing; explain(analyze=True) still runs it."""
+    eng, ex = duckdb_engine
+    sql = ("SELECT n_name, COUNT(*) AS n FROM lineitem "
+           "JOIN orders ON l_orderkey = o_orderkey "
+           "JOIN nation ON o_custkey % 25 = n_nationkey "
+           "GROUP BY n_name")
+    plan = eng.sql_plan(sql).plan
+    q0 = ex.metrics().get("queries", 0)
+    out = eng.explain(plan)
+    assert "Federated" in out and "Spark physical plan" in out
+    assert ex.metrics().get("queries", 0) == q0
+    assert "rows:" in eng.explain(plan, analyze=True)
+    assert ex.metrics().get("queries", 0) > q0
+
+
+def test_null_literal_column_over_remote_matches_local(duckdb_engine,
+                                                        spark):
+    """`NULL AS z` over a remote table: the cast target is Spark's
+    VOID type, which no remote column type casts to — the cast layer
+    must produce the NULL literal, matching Spark's own schema."""
+    eng, _ = duckdb_engine
+    q = ("SELECT c_custkey, NULL AS z FROM customer "
+         "WHERE c_custkey < 4")
+    spark.read.parquet(f"{TESTDATA}/customer.parquet") \
+        .createOrReplaceTempView("customer")
+    try:
+        want = spark.sql(q)
+        got = eng.sql(q)
+        assert got.schema == want.schema
+        assert sorted(got.collect()) == sorted(want.collect())
+        assert got.collect(), "non-vacuous"
+    finally:
+        spark.catalog.dropTempView("customer")
+
+
+def test_sqlite_result_gets_row_count_hint(spark):
+    """Every executor whose rows reach the driver answers statistics()
+    from the count it recorded: a small SQLite dim joined to a local
+    fact plans as a broadcast join, and a write drops the count."""
+    from datafusion_federation_spark.engine import FederationEngine
+    from datafusion_federation_spark.sources.provider import (
+        SQLiteExecutor, SQLProvider)
+    ex = SQLiteExecutor(name="sqlite_hint", compute_context="hint")
+    ex.load_rows("dim", "CREATE TABLE dim (k INTEGER, label TEXT)",
+                 [(i, f"l{i}") for i in range(5)])
+    eng = FederationEngine(spark)
+    eng.register_remote(SQLProvider(ex), "dim")
+    eng.register_local_df(
+        "fact", spark.range(0, 100).selectExpr("id % 5 AS fk"))
+    df = eng.sql("SELECT label, COUNT(*) AS n FROM fact "
+                 "JOIN dim ON fk = k GROUP BY label")
+    assert sorted(r.n for r in df.collect()) == [20] * 5
+    last = ex.metrics()["last_sql"]
+    assert ex.statistics(last) == 5
+    assert "strategy=broadcast" in \
+        df._jdf.queryExecution().optimizedPlan().toString()
+    ex.execute_statement(None, "INSERT INTO dim VALUES (5, 'l5')")
+    assert ex.statistics(last) is None
 
 
 def test_catalog_discover_first_match_wins(spark):
@@ -353,3 +419,35 @@ def test_ordered_agg_gate_degrades_live_on_sqlite(spark):
     joined = " ".join(s.upper() for s in ex.sent)
     assert "STRING_AGG" not in joined and "GROUP_CONCAT" not in joined, \
         f"ordered aggregate reached the remote engine: {ex.sent}"
+
+
+@pytest.mark.parametrize("sql", [
+    "SELECT n_nationkey FROM nation WHERE n_nationkey < 3 "
+    "EXCEPT (SELECT n_nationkey FROM nation WHERE n_nationkey = 1)",
+    "(SELECT n_nationkey FROM nation WHERE n_nationkey < 5 "
+    "UNION SELECT n_regionkey FROM nation) "
+    "INTERSECT (SELECT n_nationkey FROM nation WHERE n_nationkey > 2)",
+    "SELECT n_nationkey, NULLIF(n_regionkey, 1) IS NOT DISTINCT FROM 2 "
+    "AS b FROM nation",
+])
+def test_parser_gaps_claim_one_remote_query(duckdb_engine, sql):
+    """A parenthesized set-operation branch and a bare `IS [NOT]
+    DISTINCT FROM` select item parse in the front door, so the query
+    claims as ONE remote query instead of falling back to Spark's
+    parser over whole-table reads."""
+    eng, ex = duckdb_engine
+
+    def refuse(query, params=None):
+        raise AssertionError(f"fell back to Spark SQL views: {query}")
+
+    from datafusion_federation_spark.federation import federate
+    eng._sql_via_views = refuse
+    fed = federate(eng.sql_plan(sql).plan)
+    remotes = [n for n in walk_plan(fed) if isinstance(n, RemoteQueryNode)]
+    assert len(remotes) == 1
+    assert remotes[0].sql != 'SELECT * FROM "nation"'
+    q0 = ex.metrics().get("queries", 0)
+    got = sorted(tuple(r) for r in eng.sql(sql).collect())
+    assert ex.metrics().get("queries", 0) == q0 + 1
+    assert got == sorted(_duck_oracle(sql))
+    assert got, "non-vacuous"

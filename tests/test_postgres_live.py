@@ -335,21 +335,55 @@ def test_pg_numeric_aggregate_casts(spark, pg):
 
 
 def test_pg_statistics_estimate_and_errors(spark, pg):
-    """EXPLAIN-based statistics() returns a planner estimate (flagged
-    estimate -> 2x margin applies at the broadcast comparison); engine
-    errors surface the PostgreSQL message, not a silent fallback."""
+    """The partitioned executor's EXPLAIN-based statistics() returns a
+    planner estimate (flagged estimate -> 2x margin applies at the
+    broadcast comparison); engine errors surface the PostgreSQL
+    message, not a silent fallback."""
+    from datafusion_federation_spark.sources.postgres import (
+        PartitionedPostgresExecutor)
     from datafusion_federation_spark.sources.provider import SQLProvider
-    ex = pg.executor(name="pg_st", compute_context="pg:stats", schema_ns="st")
-    ex.execute_statement(None, "CREATE TABLE st (k INT)")
-    ex.execute_statement(None,
-                         "INSERT INTO st SELECT generate_series(1, 50)")
-    ex.execute_statement(None, "ANALYZE st")
+    base = pg.executor(name="pg_st0", compute_context="pg:stats",
+                       schema_ns="st")
+    base.execute_statement(None, "CREATE TABLE st (k INT)")
+    base.execute_statement(None,
+                           "INSERT INTO st SELECT generate_series(1, 50)")
+    base.execute_statement(None, "ANALYZE st")
+    ex = PartitionedPostgresExecutor(
+        base.conninfo, split_col="k", name="pg_st",
+        compute_context="pg:stats", schema_ns="st")
     est = ex.statistics("SELECT * FROM st")
     assert est is not None and 25 <= est <= 100
     assert ex.statistics_is_estimate is True
     assert SQLProvider(ex) is not None
     with pytest.raises(RuntimeError, match="PostgreSQL error"):
         ex.execute_statement(None, "SELECT * FROM no_such_table_xyz")
+
+
+def test_pg_read_hint_sends_no_explain(pg_engine):
+    """The driver-side executor's broadcast hint is the row count of
+    the result it just read: an engine read sends no EXPLAIN (or any
+    other statistics query) to the server, and a write drops the
+    count."""
+    eng, ex, _ = pg_engine
+    sent = []
+    query = ex.conn.query
+
+    def recording(sql):
+        sent.append(sql)
+        return query(sql)
+
+    ex.conn.query = recording
+    try:
+        rows = eng.sql("SELECT n_name FROM nation "
+                       "WHERE n_regionkey = 1").collect()
+    finally:
+        del ex.conn.query
+    assert len(rows) == 5
+    assert sent, "the read must go through conn.query"
+    assert not [q for q in sent if "EXPLAIN" in q.upper()], sent
+    assert ex.statistics(ex.metrics()["last_sql"]) == 5
+    ex.execute_statement(None, "CREATE TABLE IF NOT EXISTS hint_w (k INT)")
+    assert ex.statistics(sent[-1]) is None
 
 
 def test_pg_partitioned_read_equals_single_stream(spark, pg):
