@@ -31,7 +31,7 @@ from .plans.nodes import (
 )
 from .federation import absorbed_relations
 from .schema_cast import cast_dataframe
-from .sources.provider import LRU, SchemaCache, empty_dataframe
+from .sources.provider import LRU, SchemaCache
 
 #: a federated result the executor's statistics() puts at or below this
 #: many rows is hinted for broadcast
@@ -92,7 +92,9 @@ class Compiler:
     def compile(self, plan: Plan, plan_only: bool = False) -> DataFrame:
         """``plan_only`` builds the frame without running remote SQL:
         each federated node whose schema is known compiles to an empty
-        frame of that schema (for explain)."""
+        frame of that schema (for explain), and the compile-time probes
+        that would read those frames (runtime-filter bounds, the theta
+        BNL gate) are skipped."""
         self._plan_only = plan_only
         try:
             return self._c(plan)
@@ -116,12 +118,20 @@ class Compiler:
     def _read_remote(self, p: RemoteQueryNode, schema) -> DataFrame:
         ex = p.provider.executor
         sql = ex.apply_runtime_filters(p.sql, p.runtime_filters)
-        df = ex.execute(self.spark, sql, schema=schema)
-        if schema is not None and _cast_changes(df.schema, schema):
-            # SchemaCastScanExec analog: cast the remote result to the
-            # plan's expected schema right after the read, unless the
-            # remote already returned its names and types.
-            df = cast_dataframe(df, schema)
+        if self._plan_only and schema is not None:
+            # explain without analyze: an empty RDD-backed leaf builds
+            # with no job, and unlike a `WHERE 1 = 0` LocalRelation
+            # Catalyst cannot prove it empty, so the joins, aggregates
+            # and local scans above it stay in the explained plan
+            df = self.spark.createDataFrame(
+                self.spark.sparkContext.emptyRDD(), schema)
+        else:
+            df = ex.execute(self.spark, sql, schema=schema)
+            if schema is not None and _cast_changes(df.schema, schema):
+                # SchemaCastScanExec analog: cast the remote result to
+                # the plan's expected schema right after the read,
+                # unless the remote already returned its names and types.
+                df = cast_dataframe(df, schema)
         # statistics-driven broadcast posture: a known-small federated
         # result is a broadcast candidate for downstream joins
         # (reference statistics hook, src/sql/executor.rs:61-63).
@@ -154,11 +164,7 @@ class Compiler:
             return self._c(p.input)
 
         if isinstance(p, RemoteQueryNode):
-            schema = self._remote_schema(p)
-            if self._plan_only and schema is not None:
-                df = empty_dataframe(self.spark, schema)
-            else:
-                df = self._read_remote(p, schema)
+            df = self._read_remote(p, self._remote_schema(p))
             # the claimed sub-plan's qualifiers were absorbed into the
             # remote SQL; re-apply the first on the DataFrame so local
             # parents (joins above the federation cut) can still qualify
@@ -270,7 +276,10 @@ class Compiler:
 
         if isinstance(p, Join):
             left = right = None
-            if self.runtime_join_filters and p.how in ("inner", "semi"):
+            # plain explain skips the bounds job: over empty remote
+            # leaves it would only ever bound the remote side to nothing
+            if (self.runtime_join_filters and p.how in ("inner", "semi")
+                    and not self._plan_only):
                 p, left, right = self._push_runtime_join_filter(p)
             left = self._c(p.left) if left is None else left
             right = self._c(p.right) if right is None else right
@@ -725,6 +734,11 @@ class Compiler:
         key = ((gate, repr(key_node)) if key_node is not None
                else None)
         verdict = self._bnl_gate_cache.get(key) if key else None
+        if verdict is None and self._plan_only:
+            # plain explain: remote leaves are empty frames, so a probe
+            # would prove nothing — plan the broadcast, memoize nothing
+            # (a later real compile of this body must still probe)
+            return F.broadcast(df)
         if verdict is None:
             self._bnl_probe_count += 1
             verdict = df.limit(gate + 1).count() <= gate

@@ -47,7 +47,7 @@ from typing import Any, Callable, Dict, List, Optional, Tuple
 
 from pyspark.sql import types as T
 
-from .partitioned import SliceReadExecutor
+from .partitioned import SliceReadExecutor, read_slices
 from .provider import SQLExecutor, arrow_to_spark, empty_dataframe
 
 # -- libpq via ctypes -------------------------------------------------------
@@ -436,8 +436,6 @@ def read_postgres_partitioned(spark, conninfo: str, sql: str,
     coalesce pins NULL split keys to slice 0 instead of dropping them.
     ``conninfo`` must be reachable from executor hosts — a Unix-socket
     conninfo only works in local mode; use TCP on a real cluster."""
-    from .partitioned import read_slices
-
     def probe(q):
         boot = PostgresConnection(conninfo)
         try:

@@ -217,9 +217,9 @@ class SQLExecutor:
 
     @property
     def _row_cache(self) -> LRU:
-        """Result row counts by SQL text; every write through this
-        executor clears it, since counts read before a write no longer
-        bound the table."""
+        """Result row counts by SQL text; a write through an executor
+        that keeps counts clears them, since counts read before a write
+        no longer bound the table."""
         return self.__dict__.setdefault("_row_cache_store", LRU())
 
     def metrics(self) -> Dict[str, Any]:
@@ -510,7 +510,6 @@ class JDBCExecutor(SQLExecutor):
         (df.write.mode(mode)
          .options(**self.properties)
          .jdbc(self.url, name))
-        self._row_cache.clear()
         return None
 
     def execute_statement(self, spark, sql: str):
@@ -535,7 +534,6 @@ class JDBCExecutor(SQLExecutor):
         finally:
             conn.close()
         self._record(sql, time.time() - t0)
-        self._row_cache.clear()
         return n
 
 
@@ -732,5 +730,4 @@ class SparkSQLExecutor(SQLExecutor):
         t0 = time.time()
         self.remote.sql(sql).collect()    # DML: collect() forces it
         self._record(sql, time.time() - t0)
-        self._row_cache.clear()
         return None

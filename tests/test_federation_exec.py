@@ -134,8 +134,31 @@ def test_explain_mixed_plan_runs_no_remote_query(duckdb_engine):
     out = eng.explain(plan)
     assert "Federated" in out and "Spark physical plan" in out
     assert ex.metrics().get("queries", 0) == q0
+    # the empty leaves must not let Catalyst fold the residue away: the
+    # local scan and the joins above the remote leaves stay planned
+    physical = out.split("== Spark physical plan (local residue) ==")[1]
+    assert "lineitem" in physical
+    assert "Join" in physical and "Aggregate" in physical
     assert "rows:" in eng.explain(plan, analyze=True)
     assert ex.metrics().get("queries", 0) > q0
+
+
+def test_explain_does_not_memoize_theta_gate(duckdb_engine):
+    """Plain explain plans the remote inner of a pure-theta LATERAL as
+    an empty frame; the broadcast-nested-loop size gate must neither
+    probe that frame nor remember a verdict from it, so running the
+    same query over an inner larger than the gate still refuses."""
+    eng, _ = duckdb_engine
+    sql = """
+SELECT c.c_custkey, s.n FROM customer c JOIN LATERAL (
+  SELECT CAST(COUNT(*) AS BIGINT) AS n FROM orders o
+  WHERE o.o_totalprice > c.c_acctbal * 40) s ON TRUE"""
+    eng.compiler.theta_bnl_rows = 10
+    probes = eng.compiler._bnl_probe_count
+    assert "BroadcastNestedLoopJoin" in eng.explain(eng.sql_plan(sql).plan)
+    assert eng.compiler._bnl_probe_count == probes
+    with pytest.raises(NotImplementedError, match="equality"):
+        eng.sql(sql).collect()
 
 
 def test_null_literal_column_over_remote_matches_local(duckdb_engine,
