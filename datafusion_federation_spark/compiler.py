@@ -18,6 +18,8 @@ else (``_remote_schema``).
 
 from __future__ import annotations
 
+import functools
+import operator
 from typing import Any, Dict, List, Tuple
 
 from pyspark.sql import Column, DataFrame, SparkSession
@@ -990,20 +992,22 @@ class Compiler:
         each supported shape rewrites to a set-level plan:
 
         - plain Filter/Project body        -> equi/theta JOIN
-        - ungrouped Aggregate body         -> grouped agg keyed by the
-          correlation columns, LEFT-joined to the DISTINCT outer keys so
-          empty groups surface (COUNT coalesced to 0 — the engines'
-          exactly-one-row-per-outer-row contract), then joined back
+        - ungrouped Aggregate body         -> _decorrelate_agg, the
+          kernel correlated scalar subqueries use too: exactly one row
+          of aggregate values per outer row (empty groups take the
+          aggregates over an empty input)
+        - grouped Aggregate body           -> _lateral_grouped_agg
         - ORDER BY + LIMIT k body          -> row_number() OVER
           (PARTITION BY correlation keys ORDER BY sort keys) <= k, then
-          JOIN (the top-k-per-key pattern)
+          JOIN (the top-k-per-key pattern); a theta residue ranks per
+          outer tuple instead (_lateral_theta_topk)
 
         Anything else refuses loudly (the repo's semantic-refusal
         posture): NotImplementedError, never an approximation. 100 TB:
         every rewrite is one keyed shuffle + a join Catalyst plans
         normally; the top-k window partitions by the correlation key, so
         skew follows the key distribution like any groupBy."""
-        from .expressions import BinaryOp, Col as ColE, Lit, OuterRef, walk
+        from .expressions import Col as ColE, Lit, walk
 
         left_df = self._c(p.left)
         on_expr = p.condition
@@ -1042,52 +1046,6 @@ class Compiler:
             # engines do the same)
             core = node.input
 
-        def _is_outer_expr(e):
-            """True when `e` references ONLY outer columns (no inner
-            Col, no subqueries): it can be evaluated on the LEFT side
-            verbatim, which is what makes `inner_col = f(outer.col)`
-            correlation decorrelatable (r9 — the composed fuzzer's
-            first run hit the bare-OuterRef-only refusal on
-            `n_regionkey = t.k % 5`)."""
-            from .expressions import Exists, InSubquery, ScalarSubquery
-            ns = list(walk(e))
-            return (any(isinstance(x, OuterRef) for x in ns)
-                    and not any(isinstance(x, ColE) for x in ns)
-                    and not any(isinstance(
-                        x, (Exists, InSubquery, ScalarSubquery))
-                        for x in ns))
-
-        def split_conds(conds):
-            """Correlated conjuncts -> (inner Col, outer-side expr)
-            equi pairs; the outer side may be a bare OuterRef or any
-            expression over outer columns only. None when any conjunct
-            is not such an equality."""
-            pairs = []
-            for c in conds:
-                if isinstance(c, BinaryOp) and c.op == "=":
-                    a, b = c.left, c.right
-                    if isinstance(a, ColE) and _is_outer_expr(b):
-                        pairs.append((a, b))
-                        continue
-                    if isinstance(b, ColE) and _is_outer_expr(a):
-                        pairs.append((b, a))
-                        continue
-                return None
-            return pairs
-
-        def _outer_expr_col(e):
-            """Spark column for an outer-side expression: resolve every
-            OuterRef against the left frame, leave the rest to the
-            ordinary expression compiler."""
-            from .expressions import SparkCol
-
-            def repl(x):
-                if isinstance(x, OuterRef):
-                    return SparkCol(
-                        _resolve_outer(left_df, x, p.left), x.name)
-                return x
-            return _rewrite_expr(e, repl).to_spark()
-
         # grouped lateral body (r9, graduated from a refusal): SELECT
         # over GROUP BY inside LATERAL returns one row PER GROUP per
         # outer row. The parser wraps order-shuffled select lists as a
@@ -1102,106 +1060,24 @@ class Compiler:
             if on_expr is not None:
                 raise NotImplementedError(
                     "LATERAL aggregate supports only ON TRUE")
-            return self._lateral_grouped_agg(
-                p, g_core, left_df, alias, _outer_expr_col,
-                _is_outer_expr)
+            return self._lateral_grouped_agg(p, g_core, left_df, alias)
 
         if isinstance(core, Aggregate):
-            agg = core
             if on_expr is not None:
                 raise NotImplementedError(
                     "LATERAL aggregate supports only ON TRUE")
-            conds, cleaned_in = _extract_correlated(agg.input)
-            self._pin_static_leaves(cleaned_in)
-            # classify: equality (inner_col = f(outer)) pairs vs theta
-            # residue (any other correlated conjunct — inequalities,
-            # expressions on both sides). r9: theta residue no longer
-            # refuses when at least one equality key bounds the join.
-            pairs, theta = [], []
-            for c0 in conds:
-                if isinstance(c0, BinaryOp) and c0.op == "=":
-                    a0, b0 = c0.left, c0.right
-                    if isinstance(a0, ColE) and _is_outer_expr(b0):
-                        pairs.append((a0, b0))
-                        continue
-                    if isinstance(b0, ColE) and _is_outer_expr(a0):
-                        pairs.append((b0, a0))
-                        continue
-                theta.append(c0)
-            if not pairs and not theta:
+            conds, body = _extract_correlated(core.input)
+            if not conds:
                 # uncorrelated: a global 1-row aggregate, same for every
                 # outer row — plain (broadcast-sized) cross join
-                agg_df = self._c(agg)
+                agg_df = self._c(core)
                 if alias:
                     agg_df = agg_df.alias(alias)
                 return left_df.crossJoin(agg_df)
-            if theta:
-                # r10: pure theta (no equality pair) no longer refuses
-                # unconditionally — _lateral_theta_agg applies the
-                # size-gated broadcast-nested-loop path when the inner
-                # side proves small, and refuses above the gate
-                return self._lateral_theta_agg(
-                    p, agg, cleaned_in, pairs, theta, left_df, alias,
-                    _outer_expr_col)
-            inner_keys = [a for a, _ in pairs]
-            widened = _widen_projects(cleaned_in,
-                                      [k.name for k in inner_keys])
-            agg_df = self._c(Aggregate(widened, list(inner_keys),
-                                       list(agg.aggregates)))
-            out_cols = [a.output_name() for a in agg.aggregates]
-            # DISTINCT outer keys LEFT JOIN the grouped agg: empty
-            # groups get their one row (count -> 0) BEFORE the join
-            # back, so the per-outer-row contract holds under every
-            # join type the parser admits here
-            okeys = [_outer_expr_col(r).alias(f"__lat_k{i}")
-                     for i, (_, r) in enumerate(pairs)]
-            keyed = left_df.select(*okeys).dropDuplicates()
-            # plain equality here: a NULL outer key must NOT match inner
-            # rows (SQL `inner = NULL` never holds), it just keeps its
-            # empty-group row via the LEFT join
-            jc = None
-            for i, (a, _) in enumerate(pairs):
-                c = keyed[f"__lat_k{i}"] == agg_df[a.name]
-                jc = c if jc is None else (jc & c)
-            # engines return the aggregate row even for outer rows with
-            # ZERO matching inner rows — compute those empty-group
-            # values by evaluating the SAME aggregate expressions over
-            # a provably-empty input (count()->0, CAST(count())->0,
-            # max()->NULL, count()+1->1 — any expression, exactly the
-            # engines' semantics; a coalesce-to-0 patch would be wrong
-            # for anything but a bare count). One 1-row collect at
-            # compile: metadata-sized, like the q76/q79 dim loads.
-            empty_df = self._c(Aggregate(Filter(cleaned_in, Lit(False)),
-                                         [], list(agg.aggregates)))
-            empty_row = empty_df.collect()[0]
-            miss = agg_df[pairs[0][0].name].isNull()
-            fixed = []
-            for a, fld in zip(agg.aggregates, empty_df.schema.fields):
-                name = a.output_name()
-                col = F.when(miss, F.lit(empty_row[name])
-                             .cast(fld.dataType)) \
-                    .otherwise(agg_df[name])
-                fixed.append(col.alias(name))
-            right2 = (keyed.join(agg_df, on=jc, how="left")
-                      .select(*[keyed[f"__lat_k{i}"]
-                                for i in range(len(pairs))], *fixed))
-            if alias:
-                right2 = right2.alias(alias)
-            # eqNullSafe on the join BACK: a NULL-keyed outer row still
-            # owns its count=0 row (the engines evaluate the subquery
-            # for every outer row, NULL keys included)
-            jc2 = None
-            for i, (_, r) in enumerate(pairs):
-                c = _outer_expr_col(r).eqNullSafe(
-                    right2[f"__lat_k{i}"])
-                jc2 = c if jc2 is None else (jc2 & c)
-            joined = left_df.join(right2, on=jc2, how="left")
-            # project the helper key columns away so SELECT * sees
-            # exactly left.* + the body's outputs (review r7 s3 finding
-            # #3); attribute qualifiers survive the projection, so
-            # alias-qualified parent refs (s.n) still resolve
-            return joined.select(left_df["*"],
-                                 *[right2[c] for c in out_cols])
+            return self._decorrelate_agg(
+                left_df, p.left, core, conds, body,
+                [a.output_name() for a in core.aggregates], "__lat",
+                "LATERAL aggregate", alias=alias)[0]
 
         # simple and top-k arms share the correlated-join skeleton
         inner_plan = sort.input if sort is not None else core
@@ -1219,26 +1095,19 @@ class Compiler:
         right_df = self._c(cleaned)
 
         if limit is not None:
-            pairs = split_conds(conds)
-            if pairs is None:
+            pairs, theta = _split_correlation(
+                conds, "LATERAL ORDER BY/LIMIT")
+            if theta:
                 # r9: theta residue (inequalities alongside equality
                 # keys) takes the join-then-window arm — the per-outer-
                 # row filtered set changes the ranking, so the window
                 # must partition by the OUTER tuple, not the inner key
                 return self._lateral_theta_topk(
-                    p, conds, cleaned, sort, limit, left_df, alias,
-                    _outer_expr_col, _is_outer_expr, on_expr)
-            from pyspark.sql import Window as W
-            win = W.partitionBy(*[right_df[a.name] for a, _ in pairs]) \
-                .orderBy(*[k.to_spark() for k in sort.keys])
-            rn = F.row_number().over(win)
-            lo = limit.skip or 0
-            hi = lo + limit.fetch if limit.fetch is not None else None
-            right_df = right_df.withColumn("__lat_rn", rn)
-            flt = F.col("__lat_rn") > F.lit(lo)
-            if hi is not None:
-                flt = flt & (F.col("__lat_rn") <= F.lit(hi))
-            right_df = right_df.filter(flt).drop("__lat_rn")
+                    p, pairs, theta, right_df, cleaned, sort, limit,
+                    left_df, alias, on_expr)
+            right_df = _rank_filter(
+                right_df, [right_df[a.name] for a, _ in pairs],
+                sort, limit)
 
         if alias:
             right_df = right_df.alias(alias)
@@ -1249,7 +1118,7 @@ class Compiler:
         if on_expr is not None:
             oc = on_expr.to_spark()
             jc = oc if jc is None else (jc & oc)
-        how = {"cross": "inner", "inner": "inner", "left": "left"}[p.how]
+        how = _LATERAL_HOW[p.how]
         if jc is None:
             if how == "inner":
                 joined = left_df.crossJoin(right_df)
@@ -1268,117 +1137,51 @@ class Compiler:
                                  *[right_df[c] for c in out_cols])
         return joined
 
-    def _lateral_theta_topk(self, p, conds, cleaned, sort, limit,
-                            left_df, alias, outer_expr_col,
-                            is_outer_expr, on_expr=None):
+    def _lateral_theta_topk(self, p, pairs, theta, inner_df, key_node,
+                            sort, limit, left_df, alias, on_expr=None):
         """Theta-correlated LATERAL top-k (r9; graduated from the
         equality-only refusal). An inequality conjunct makes the
         ranked set per-outer-row, so the inner-key-partitioned window
-        of the equality arm is wrong — instead: DISTINCT outer tuples
-        (equality key exprs + theta outer refs) INNER-join the inner
-        side on eq keys + theta residue, row_number partitions by the
-        OUTER tuple, rows outside (skip, skip+fetch] drop, and the
-        ranked rows join back null-safely (LEFT for LEFT JOIN LATERAL
-        — unmatched outer rows null-extend; comma/CROSS drops them).
-        With >= 1 equality pair the join hashes with theta as residual
-        conditions; PURE theta (r10) takes the size-gated broadcast-
-        nested-loop path. 100 TB: one keyed shuffle + one window over
-        the outer-tuple partitioning (or a broadcast BNL bounded by
-        the gate) — skew follows the outer key distribution like any
-        top-k-per-key."""
-        from pyspark.sql import Window as W
-
-        from .expressions import (
-            BinaryOp, Col as ColE, Exists, InSubquery, OuterRef,
-            ScalarSubquery, SparkCol, walk as walk_expr)
-        eq_pairs, theta = [], []
-        for c0 in conds:
-            if isinstance(c0, BinaryOp) and c0.op == "=":
-                a0, b0 = c0.left, c0.right
-                if isinstance(a0, ColE) and is_outer_expr(b0):
-                    eq_pairs.append((a0, b0))
-                    continue
-                if isinstance(b0, ColE) and is_outer_expr(a0):
-                    eq_pairs.append((b0, a0))
-                    continue
-            theta.append(c0)
-        for c0 in theta:
-            for x in walk_expr(c0):
-                if isinstance(x, (Exists, InSubquery, ScalarSubquery)):
-                    raise NotImplementedError(
-                        "LATERAL correlation may not contain "
-                        "subqueries")
-        inner_df = self._c(cleaned)
-        if not eq_pairs:
+        of the equality arm is wrong — instead the DISTINCT outer
+        tuples INNER-join the inner side (_outer_tuples), row_number
+        partitions by the OUTER tuple, rows outside (skip, skip+fetch]
+        drop, and the ranked rows join back null-safely (LEFT for LEFT
+        JOIN LATERAL — unmatched outer rows null-extend; comma/CROSS
+        drops them). With >= 1 equality pair the join hashes with theta
+        as residual conditions; PURE theta (r10) takes the size-gated
+        broadcast-nested-loop path. 100 TB: one keyed shuffle + one
+        window over the outer-tuple partitioning (or a broadcast BNL
+        bounded by the gate) — skew follows the outer key distribution
+        like any top-k-per-key."""
+        if not pairs:
             # r10: pure theta — size-gated broadcast nested loop (the
-            # window below partitions by the theta outer refs alone,
-            # which IS the outer tuple the ranking depends on)
+            # window partitions by the theta outer refs alone, which IS
+            # the outer tuple the ranking depends on)
             inner_df = self._theta_bnl_gate(
-                inner_df, "LATERAL ORDER BY/LIMIT", key_node=cleaned)
-        theta_refs, seen = [], {}
-        for c0 in theta:
-            for x in walk_expr(c0):
-                if isinstance(x, OuterRef) \
-                        and x.name.lower() not in seen:
-                    seen[x.name.lower()] = len(theta_refs)
-                    theta_refs.append(x)
-        k_names = [f"__lat_k{i}" for i in range(len(eq_pairs))]
-        t_names = [f"__lat_t{j}" for j in range(len(theta_refs))]
-        helpers = k_names + t_names
-        okeys = ([outer_expr_col(r).alias(n)
-                  for (_, r), n in zip(eq_pairs, k_names)] +
-                 [outer_expr_col(x).alias(n)
-                  for x, n in zip(theta_refs, t_names)])
-        keyed = left_df.select(*okeys).dropDuplicates()
-        jc = None
-        for (a, _), n in zip(eq_pairs, k_names):
-            c1 = keyed[n] == inner_df[a.name]
-            jc = c1 if jc is None else jc & c1
-        for c0 in theta:
-            def repl(x):
-                if isinstance(x, OuterRef):
-                    return SparkCol(
-                        keyed[t_names[seen[x.name.lower()]]], x.name)
-                if isinstance(x, ColE):
-                    return SparkCol(inner_df[x.name], x.name)
-                return x
-            c1 = _rewrite_expr(c0, repl).to_spark()
-            jc = c1 if jc is None else jc & c1
-        joined = keyed.join(inner_df, on=jc, how="inner")
-        win = (W.partitionBy(*[keyed[n] for n in helpers])
-               .orderBy(*[k.to_spark() for k in sort.keys]))
-        lo = limit.skip or 0
-        hi = lo + limit.fetch if limit.fetch is not None else None
-        j2 = joined.withColumn("__lat_rn", F.row_number().over(win))
-        flt = F.col("__lat_rn") > F.lit(lo)
-        if hi is not None:
-            flt = flt & (F.col("__lat_rn") <= F.lit(hi))
-        right2 = j2.filter(flt).drop("__lat_rn")
+                inner_df, "LATERAL ORDER BY/LIMIT", key_node=key_node)
+        keyed, outer_cols, on_inner = _outer_tuples(
+            left_df, p.left, pairs, theta, "__lat")
+        joined = keyed.join(inner_df, on=on_inner(inner_df), how="inner")
+        ranked = _rank_filter(joined, [keyed[h] for h in keyed.columns],
+                              sort, limit)
         if alias:
-            right2 = right2.alias(alias)
-        how = {"cross": "inner", "inner": "inner", "left": "left"}[p.how]
-        jc2 = None
-        for (_, r), n in zip(eq_pairs, k_names):
-            c1 = outer_expr_col(r).eqNullSafe(right2[n])
-            jc2 = c1 if jc2 is None else jc2 & c1
-        for x, n in zip(theta_refs, t_names):
-            c1 = outer_expr_col(x).eqNullSafe(right2[n])
-            jc2 = c1 if jc2 is None else jc2 & c1
+            ranked = ranked.alias(alias)
+        back = _conj([c.eqNullSafe(ranked[h])
+                      for c, h in zip(outer_cols, keyed.columns)])
         if on_expr is not None:
             # r10 (ADVICE high): a non-trivial ON predicate filters the
             # ranked rows AFTER ranking, exactly like the equality arm
             # — AND it into the join-back condition (LEFT JOIN LATERAL
             # null-extends when it fails; inner/comma drops the row)
-            jc2 = jc2 & on_expr.to_spark()
-        joined2 = left_df.join(right2, on=jc2, how=how)
+            back = back & on_expr.to_spark()
+        out = left_df.join(ranked, on=back, how=_LATERAL_HOW[p.how])
         out_cols = _plan_output_cols(p.right)
         if out_cols is not None:
-            return joined2.select(left_df["*"],
-                                  *[right2[c] for c in out_cols])
-        return joined2
+            return out.select(left_df["*"],
+                              *[ranked[c] for c in out_cols])
+        return out
 
-    def _lateral_grouped_agg(self, p, agg, left_df, alias,
-                             outer_expr_col, is_outer_expr):
+    def _lateral_grouped_agg(self, p, agg, left_df, alias):
         """LATERAL body with its own GROUP BY (r9; graduated from a
         refusal). Engines return one row per GROUP per outer row;
         set-level rewrite: group the inner side by (correlation keys +
@@ -1392,25 +1195,16 @@ class Compiler:
         for NULL outer keys). 100 TB: one keyed shuffle for the
         grouped aggregate, then an ordinary equi-join Catalyst plans
         (broadcast when the grouped side is small)."""
-        from .expressions import (
-            BinaryOp, Col as ColE, walk as walk_expr)
+        from .expressions import Col as ColE, walk
 
         conds, cleaned_in = _extract_correlated(agg.input)
         self._pin_static_leaves(cleaned_in)
-        pairs = []
-        for c0 in conds:
-            if isinstance(c0, BinaryOp) and c0.op == "=":
-                a0, b0 = c0.left, c0.right
-                if isinstance(a0, ColE) and is_outer_expr(b0):
-                    pairs.append((a0, b0))
-                    continue
-                if isinstance(b0, ColE) and is_outer_expr(a0):
-                    pairs.append((b0, a0))
-                    continue
+        pairs, theta = _split_correlation(conds, "grouped LATERAL aggregate")
+        if theta:
             raise NotImplementedError(
                 "grouped LATERAL aggregate needs pure equality "
                 "correlation (inner_col = <expr over outer columns>)")
-        how = {"cross": "inner", "inner": "inner", "left": "left"}[p.how]
+        how = _LATERAL_HOW[p.how]
         if not pairs:
             # uncorrelated grouped body: same groups for every outer row
             body = self._c(p.right)
@@ -1423,7 +1217,7 @@ class Compiler:
                         if not (isinstance(g, ColE)
                                 and g.name.lower() in ik_names)]
         need = [k.name for k in inner_keys] + \
-               [x.name for g in agg.group_by for x in walk_expr(g)
+               [x.name for g in agg.group_by for x in walk(g)
                 if isinstance(x, ColE)]
         widened = _widen_projects(cleaned_in, need)
         agg_df = self._c(Aggregate(widened,
@@ -1431,10 +1225,8 @@ class Compiler:
                                    list(agg.aggregates)))
         if alias:
             agg_df = agg_df.alias(alias)
-        jc = None
-        for (a, r) in pairs:
-            c0 = outer_expr_col(r) == agg_df[a.name]
-            jc = c0 if jc is None else jc & c0
+        jc = _conj([_outer_col(r, left_df, p.left) == agg_df[a.name]
+                    for a, r in pairs])
         joined = left_df.join(agg_df, on=jc, how=how)
         out_cols = _plan_output_cols(p.right)
         if out_cols is not None:
@@ -1442,115 +1234,99 @@ class Compiler:
                                  *[agg_df[c] for c in out_cols])
         return joined
 
-    def _lateral_theta_agg(self, p, agg, cleaned_in, pairs, theta,
-                           left_df, alias, outer_expr_col):
-        """Theta-correlated LATERAL aggregate (r9; graduated from a
-        refusal the composed fuzzer hit on its first run:
-        `WHERE n_regionkey = t.k % 5 AND n_nationkey > t.k`).
+    def _decorrelate_agg(self, outer_df, outer_plan, agg, conds, body,
+                         names, prefix, what, alias=None):
+        """The one decorrelation of an ungrouped correlated aggregate:
+        correlated scalar subqueries and ungrouped LATERAL bodies both
+        land here. ``conds``/``body`` are _extract_correlated's split of
+        ``agg.input``. Returns (frame, agg_names): ``outer_df``'s columns
+        plus exactly one row of aggregate values per outer row, named
+        ``names``; ``agg_names`` are Spark's names for the aggregate
+        items.
 
-        The equality arm's inner-grouped aggregate cannot express a
-        per-outer-row inequality, so this arm decorrelates with the
-        textbook join-then-group rewrite, kept EXACT for any aggregate:
+        The body compiles ONCE. Equality-only correlation groups it by
+        the inner keys and LEFT-joins on ``outer expr = inner key`` (a
+        NULL outer key matches no group: ``inner = NULL`` never holds).
+        A theta residue cannot key an inner grouping, so the DISTINCT
+        outer tuples INNER-join the body (_outer_tuples), group by the
+        tuple and LEFT-join back null-safe — a NULL outer operand still
+        finds the group its tuple formed (`b.x > coalesce(a.k, 0)`).
+        Pure theta is size-gated (_theta_bnl_gate).
 
-          keyed   = DISTINCT outer tuples (equality key exprs + every
-                    outer ref inside the theta conjuncts)
-          matched = keyed INNER JOIN inner ON eq-keys AND theta,
-                    grouped by the keyed helper columns
-          missing = keyed ANTI JOIN matched -> the SAME aggregates
-                    evaluated over a provably-empty input (count -> 0,
-                    max -> NULL, count()+1 -> 1 — exactly the engines'
-                    empty-group semantics; the equality arm's trick)
-          right2  = matched UNION missing, joined back null-safe
+        Empty group: an outer row with no group takes the aggregates
+        evaluated over an empty input — Spark SQL's own rule, exact for
+        any expression (count() -> 0, count() + 1 -> 1, collect_list()
+        -> [], max() -> NULL). That row is one more aggregate of the
+        compiled body filtered to nothing, joined in the plan on the
+        group's row count (a missing group counts 0, as does the empty
+        input), which keeps the join an equi-join: no driver collect,
+        no nested loop. A group whose value is NULL keeps its NULL
+        (`nullif(count(*), 1)` over one row) — a coalesce could not
+        tell it from a missing group.
 
-        INNER-join + union (not a left join + group) because count(*)
-        over a null-extended row would count 1 where the engines say 0.
-        A NULL outer operand makes every theta comparison UNKNOWN —
-        the inner join drops it, the anti-join resurrects it with
-        empty-group values, which is exactly `inner > NULL` never
-        matching. With >= 1 equality pair the join stays a hash join
-        with theta as residual conditions; PURE theta (r10) takes the
-        size-gated broadcast-nested-loop path — exact when the inner
-        side proves small, refused above the gate. 100 TB: one keyed
-        shuffle on the equality keys (or a broadcast BNL bounded by
-        the gate), the dedup'd outer-tuple frame is usually
-        dim-sized."""
-        from .expressions import (
-            Col as ColE, Exists, InSubquery, Lit, OuterRef,
-            ScalarSubquery, SparkCol, walk)
-        for c in theta:
-            for x in walk(c):
-                if isinstance(x, (Exists, InSubquery, ScalarSubquery)):
-                    raise NotImplementedError(
-                        "LATERAL aggregate correlation may not "
-                        "contain subqueries")
-        inner_keys = [a for a, _ in pairs]
-        need = [k.name for k in inner_keys] + \
-               [x.name for c in theta for x in walk(c)
-                if isinstance(x, ColE)]
-        widened = _widen_projects(cleaned_in, need)
-        inner_df = self._c(widened)
+        ``alias`` (a LATERAL body's name): a computed column carries no
+        qualifier, so the values are computed per DISTINCT outer tuple,
+        aliased, and joined back null-safe. 100 TB: one keyed shuffle
+        of the body plus hash joins (pure theta: a broadcast nested
+        loop bounded by the gate); the empty row is broadcast."""
+        from .expressions import walk
+        pairs, theta = _split_correlation(conds, what)
+        body = _widen_projects(
+            body, [a.name for a, _ in pairs] +
+            [x.name for c in theta for x in walk(c) if isinstance(x, Col)])
+        inner_df, items, _ = self._prepare_exprs(
+            self._c(body), list(agg.aggregates), body)
         if not pairs:
-            inner_df = self._theta_bnl_gate(
-                inner_df, "LATERAL aggregate", key_node=widened)
-        theta_refs, seen = [], {}
-        for c in theta:
-            for x in walk(c):
-                if isinstance(x, OuterRef) \
-                        and x.name.lower() not in seen:
-                    seen[x.name.lower()] = len(theta_refs)
-                    theta_refs.append(x)
-        k_names = [f"__lat_k{i}" for i in range(len(pairs))]
-        t_names = [f"__lat_t{j}" for j in range(len(theta_refs))]
-        helpers = k_names + t_names
-        okeys = ([outer_expr_col(r).alias(n)
-                  for (_, r), n in zip(pairs, k_names)] +
-                 [outer_expr_col(x).alias(n)
-                  for x, n in zip(theta_refs, t_names)])
-        keyed = left_df.select(*okeys).dropDuplicates()
-        jc = None
-        for (a, _), n in zip(pairs, k_names):
-            c0 = keyed[n] == inner_df[a.name]
-            jc = c0 if jc is None else jc & c0
-        for c in theta:
-            def repl(x):
-                if isinstance(x, OuterRef):
-                    return SparkCol(
-                        keyed[t_names[seen[x.name.lower()]]], x.name)
-                if isinstance(x, ColE):
-                    return SparkCol(inner_df[x.name], x.name)
-                return x
-            c1 = _rewrite_expr(c, repl).to_spark()
-            jc = c1 if jc is None else jc & c1
-        out_cols = [a.output_name() for a in agg.aggregates]
-        matched = (keyed.join(inner_df, on=jc, how="inner")
-                   .groupBy(*[keyed[n] for n in helpers])
-                   .agg(*[a.to_spark() for a in agg.aggregates]))
-        empty_df = self._c(Aggregate(Filter(cleaned_in, Lit(False)),
-                                     [], list(agg.aggregates)))
-        empty_row = empty_df.collect()[0]
-        anti = None
-        for n in helpers:
-            c0 = keyed[n].eqNullSafe(matched[n])
-            anti = c0 if anti is None else anti & c0
-        missing = keyed.join(matched, on=anti, how="left_anti")
-        miss_vals = missing.select(
-            *[missing[n] for n in helpers],
-            *[F.lit(empty_row[a.output_name()]).cast(fld.dataType)
-              .alias(a.output_name())
-              for a, fld in zip(agg.aggregates, empty_df.schema.fields)])
-        right2 = matched.select(*helpers, *out_cols).union(miss_vals)
-        if alias:
-            right2 = right2.alias(alias)
-        jc2 = None
-        for (_, r), n in zip(pairs, k_names):
-            c0 = outer_expr_col(r).eqNullSafe(right2[n])
-            jc2 = c0 if jc2 is None else jc2 & c0
-        for x, n in zip(theta_refs, t_names):
-            c0 = outer_expr_col(x).eqNullSafe(right2[n])
-            jc2 = c0 if jc2 is None else jc2 & c0
-        joined = left_df.join(right2, on=jc2, how="left")
-        return joined.select(left_df["*"],
-                             *[right2[c] for c in out_cols])
+            inner_df = self._theta_bnl_gate(inner_df, what, key_node=body)
+        aggs = [e.to_spark() for e in items] + [F.count(F.lit(1))]
+        vals = [f"{prefix}_v{i}" for i in range(len(names))]
+        n_rows = f"{prefix}_n"
+        empty = inner_df.filter(F.lit(False)).agg(*aggs)
+        agg_names = empty.columns[:-1]
+        empties = [f"{prefix}_e{i}" for i in range(len(names))]
+        empty = F.broadcast(empty.toDF(*empties, f"{prefix}_en"))
+
+        if theta or alias is not None:
+            keyed, outer_cols, on_inner = _outer_tuples(
+                outer_df, outer_plan, pairs, theta, prefix)
+        if theta:
+            tup = keyed.columns
+            grouped = (keyed.join(inner_df, on=on_inner(inner_df),
+                                  how="inner")
+                       .groupBy(*[keyed[h] for h in tup]).agg(*aggs)
+                       .toDF(*tup, *vals, n_rows))
+            group_keys = [grouped[h] for h in tup]
+        else:
+            keys = list(dict.fromkeys(a.name for a, _ in pairs))
+            grouped = (inner_df.groupBy(*keys).agg(*aggs)
+                       .toDF(*[f"{prefix}_k{i}" for i in range(len(keys))],
+                             *vals, n_rows))
+            group_keys = [grouped[f"{prefix}_k{keys.index(a.name)}"]
+                          for a, _ in pairs]
+        if alias is None:
+            probe = outer_df
+            probe_keys = outer_cols if theta else [
+                _outer_col(r, outer_df, outer_plan) for _, r in pairs]
+        else:
+            probe = keyed
+            probe_keys = [keyed[h] for h in keyed.columns]
+        on = _conj([pk.eqNullSafe(gk) if theta else pk == gk
+                    for pk, gk in zip(probe_keys, group_keys)])
+        missing = grouped[n_rows].isNull()
+        out = (probe.join(grouped, on=on, how="left")
+               .join(empty, on=F.coalesce(grouped[n_rows], F.lit(0))
+                     == empty[f"{prefix}_en"], how="left")
+               .select(probe["*"], *[
+                   F.when(missing, empty[e]).otherwise(grouped[v]).alias(nm)
+                   for e, v, nm in zip(empties, vals, names)]))
+        if alias is None:
+            return out, agg_names
+        out = out.alias(alias)
+        back = _conj([c.eqNullSafe(out[h])
+                      for c, h in zip(outer_cols, keyed.columns)])
+        return (outer_df.join(out, on=back, how="left")
+                .select(outer_df["*"], *[out[nm] for nm in names]),
+                agg_names)
 
     # ------------------------------------------------------------------
     def _compile_asof(self, p: AsofJoin):
@@ -2223,9 +1999,11 @@ class Compiler:
         (optimizer/mod.rs:285-305); correlated ones are refused upstream
         (optimizer/mod.rs:114-120).
 
-        Correlated scalar subqueries decorrelate instead: the ungrouped
-        aggregate becomes a GROUP BY over the correlation keys LEFT-joined
-        on those keys (see _attach_correlated_scalar).
+        Correlated scalar subqueries decorrelate instead, through the
+        kernel ungrouped LATERAL bodies share: the outer frame LEFT-joined
+        to exactly one row of the aggregate's values per outer row, an
+        empty group taking the aggregates over an empty input (see
+        _attach_correlated_scalar and _decorrelate_agg).
 
         Returns (df_with_joins, rewritten_exprs, helper_col_names).
         """
@@ -2240,10 +2018,10 @@ class Compiler:
                     n = state["n"]
                     state["n"] += 1
                     if _plan_has_external_outer_ref(x.plan):
-                        # name -> Expr mapping (empty-set values wrap in
-                        # coalesce). External-ref detection descends into
-                        # nested subqueries with scope accounting, so a
-                        # scalar whose OuterRef hides inside an inner
+                        # name -> Expr mapping. External-ref detection
+                        # descends into nested subqueries with scope
+                        # accounting, so a scalar whose OuterRef hides
+                        # inside an inner
                         # EXISTS routes here (and raises honestly if its
                         # correlation cannot be hoisted) instead of
                         # silently compiling as uncorrelated
@@ -2270,103 +2048,16 @@ class Compiler:
         new = [_rewrite_expr(e, replace) for e in exprs]
         return state["df"], new, state["cols"]
 
-    def _scalar_theta_grouped(self, state, node, cleaned, keys, theta,
-                              inner_keys, n, outer_col):
-        """Keyed rewrite for THETA-correlated scalar aggregates (r9):
-        DISTINCT outer tuples (equality key exprs + theta outer refs)
-        INNER-join the inner side on eq keys + theta residue, group by
-        the outer tuple. The caller LEFT-joins the result back and its
-        existing empty-set coalesce supplies values for outer rows the
-        inner join dropped — including NULL theta operands, whose
-        comparisons are UNKNOWN on the engines too. Returns (sub frame,
-        key_helper, val_helper) in the caller's naming scheme."""
-        from .expressions import (
-            Col, OuterRef, SparkCol, walk as walk_expr)
-        if len(keys) != len(inner_keys):
-            raise NotImplementedError(
-                "duplicate-inner-key equality correlation combined "
-                "with theta residue is unsupported")
-        need = list(inner_keys) + [
-            x.name for c in theta for x in walk_expr(c)
-            if isinstance(x, Col)]
-        widened = _widen_projects(cleaned, need)
-        inner_df = self._c(widened)
-        if not keys:
-            inner_df = self._theta_bnl_gate(
-                inner_df, "correlated scalar subquery",
-                key_node=widened)
-        theta_refs, seen = [], {}
-        for c in theta:
-            for x in walk_expr(c):
-                if isinstance(x, OuterRef) \
-                        and x.name.lower() not in seen:
-                    seen[x.name.lower()] = len(theta_refs)
-                    theta_refs.append(x)
-        key_helper = {k: f"__sq{n}_k{i}"
-                      for i, k in enumerate(inner_keys)}
-        t_names = [f"__sq{n}_t{j}" for j in range(len(theta_refs))]
-        okeys = ([outer_col(expr).alias(key_helper[ik])
-                  for expr, ik in keys] +
-                 [outer_col(x).alias(nm)
-                  for x, nm in zip(theta_refs, t_names)])
-        keyed = state["df"].select(*okeys).dropDuplicates()
-        jc = None
-        for ik in inner_keys:
-            c0 = keyed[key_helper[ik]] == inner_df[ik]
-            jc = c0 if jc is None else jc & c0
-        for c in theta:
-            def repl(x):
-                if isinstance(x, OuterRef):
-                    return SparkCol(
-                        keyed[t_names[seen[x.name.lower()]]], x.name)
-                if isinstance(x, Col):
-                    return SparkCol(inner_df[x.name], x.name)
-                return x
-            c1 = _rewrite_expr(c, repl).to_spark()
-            jc = c1 if jc is None else jc & c1
-        helpers = list(key_helper.values()) + t_names
-        grouped = (keyed.join(inner_df, on=jc, how="inner")
-                   .groupBy(*[keyed[h] for h in helpers])
-                   .agg(*[a.to_spark() for a in node.aggregates]))
-        val_cols = grouped.columns[len(helpers):]
-        val_helper = {c: f"__sq{n}_{i}" if i else f"__sq{n}"
-                      for i, c in enumerate(val_cols)}
-        sub = grouped.select(
-            *[F.col(h) for h in helpers],
-            *[F.col(c).alias(hh) for c, hh in val_helper.items()])
-        state["_theta_refs"] = list(zip(theta_refs, t_names))
-        state["cols"].extend(t_names)
-        return sub, key_helper, val_helper
-
     def _attach_correlated_scalar(self, state, plan: Plan, n: int):
-        """Decorrelate a correlated scalar aggregate subquery. The shape
-        ``(SELECT agg(e) FROM t WHERE t.k = outer.k [AND local preds])``
-        rewrites to ``t.groupBy(k).agg(...)`` LEFT-joined to the outer
-        frame on the correlation keys — the standard aggregate
-        decorrelation DataFusion's analyzer applies before the federation
-        rule sees the plan (the reference forces correlated subtrees
-        local, optimizer/mod.rs:114-120; the grouped form is how Spark's
-        own analyzer lowers the SQL-literal equivalent). At scale this is
-        one shuffle of the inner table on the correlation key followed by
-        a key equi-join — AQE picks broadcast when the grouped side is
-        small; nothing touches the driver.
-
-        Aggregate items containing COUNT coalesce to their empty-set
-        value on no-match (SQL: the subquery over an empty correlated set
-        still evaluates the expression — COUNT()=0, so COUNT(*)+1 = 1;
-        SUM over empty stays NULL). r9: the equality's outer side may be
-        ANY expression over outer columns (evaluated on the outer frame
-        verbatim), and non-equality (theta) conjuncts decorrelate via
-        the lateral machinery's keyed rewrite — DISTINCT outer tuples
-        INNER-join the inner side on eq keys + theta residue, group by
-        the outer tuple, LEFT-join back; the existing empty-set coalesce
-        supplies unmatched rows' values, so no anti-join is needed here.
-
-        Returns a mapping: aggregate output name -> replacement Expr.
-        """
-        from .expressions import (
-            AggFunc, Alias, BinaryOp, Col, Exists, Func, InSubquery, Lit,
-            OuterRef, ScalarSubquery, SparkCol, walk as walk_expr)
+        """Decorrelate a correlated scalar aggregate subquery ``(SELECT
+        agg(e) FROM t WHERE <correlation> [AND local preds])`` — the
+        standard aggregate decorrelation DataFusion's analyzer applies
+        before the federation rule sees the plan (the reference forces
+        correlated subtrees local, optimizer/mod.rs:114-120). The kernel
+        LATERAL aggregate bodies share (_decorrelate_agg) joins the outer
+        frame to exactly one row of values per outer row, in ``__sq{n}``
+        helper columns. Returns a mapping: aggregate output name ->
+        replacement Expr."""
         node = plan
         while isinstance(node, SubqueryAlias):
             node = node.input
@@ -2375,117 +2066,18 @@ class Compiler:
             raise NotImplementedError(
                 "correlated scalar subquery must be a single ungrouped "
                 "aggregate (SELECT agg(...) FROM ... WHERE correlation)")
-        conds, cleaned = _extract_correlated(node.input)
-
-        def _is_outer_expr(e):
-            ns = list(walk_expr(e))
-            return (any(isinstance(x, OuterRef) for x in ns)
-                    and not any(isinstance(x, Col) for x in ns)
-                    and not any(isinstance(
-                        x, (Exists, InSubquery, ScalarSubquery))
-                        for x in ns))
-
-        def outer_col(e):
-            """Outer-side expression -> Column against the outer frame."""
-            def repl(x):
-                if isinstance(x, OuterRef):
-                    return SparkCol(
-                        _resolve_outer(state["df"], x,
-                                       state["outer_plan"]), x.name)
-                return x
-            return _rewrite_expr(e, repl).to_spark()
-
-        keys = []            # (outer expr, inner column name)
-        theta = []
-        for c in conds:
-            if isinstance(c, BinaryOp) and c.op == "=":
-                left, right = c.left, c.right
-                if _is_outer_expr(left) and isinstance(right, Col):
-                    keys.append((left, right.name))
-                    continue
-                if _is_outer_expr(right) and isinstance(left, Col):
-                    keys.append((right, left.name))
-                    continue
-            theta.append(c)
-        if not keys and not theta:
+        conds, body = _extract_correlated(node.input)
+        if not conds:
             raise NotImplementedError(
                 "correlated scalar subquery has no correlation predicate "
                 "in its Filter spine")
-        # r10: pure theta (no equality key) flows into the keyed rewrite
-        # with an empty key set — _scalar_theta_grouped applies the
-        # size-gated broadcast-nested-loop path and refuses above it
-        for c in theta:
-            for x in walk_expr(c):
-                if isinstance(x, (Exists, InSubquery, ScalarSubquery)):
-                    raise NotImplementedError(
-                        "correlated scalar subquery: correlation may "
-                        "not contain nested subqueries")
-        inner_keys: List[str] = []
-        for _, ik in keys:
-            if ik not in inner_keys:
-                inner_keys.append(ik)
-        if theta:
-            sub, key_helper, val_helper = self._scalar_theta_grouped(
-                state, node, cleaned, keys, theta, inner_keys, n,
-                outer_col)
-        else:
-            # the subquery's own projection may have dropped the
-            # correlation keys (quantifier rewrites project only the
-            # compared column): widen explicit Projects on the spine so
-            # the grouping resolves
-            cleaned = _widen_projects(cleaned, inner_keys)
-            grouped = Aggregate(cleaned, [Col(k) for k in inner_keys],
-                                node.aggregates)
-            sub = self._c(grouped)
-            key_helper = {k: f"__sq{n}_k{i}"
-                          for i, k in enumerate(inner_keys)}
-            val_cols = sub.columns[len(inner_keys):]
-            val_helper = {c: f"__sq{n}_{i}" if i else f"__sq{n}"
-                          for i, c in enumerate(val_cols)}
-            sub = sub.select(
-                *[F.col(k).alias(h) for k, h in key_helper.items()],
-                *[F.col(c).alias(h) for c, h in val_helper.items()])
-        on = None
-        for outer_expr, ik in keys:
-            cond = outer_col(outer_expr) == sub[key_helper[ik]]
-            on = cond if on is None else (on & cond)
-        if theta:
-            # theta groups key on the outer TUPLE: the extra outer-ref
-            # helper columns must join too (null-safely is unnecessary —
-            # a NULL operand makes the theta comparison UNKNOWN, the
-            # group never exists, and the coalesce supplies the
-            # empty-set value either way)
-            for href, hname in state.pop("_theta_refs", []):
-                cond = outer_col(href) == sub[hname]
-                on = cond if on is None else on & cond
-        state["df"] = state["df"].join(sub, on=on, how="left")
-        state["cols"].extend(list(key_helper.values())
-                             + list(val_helper.values()))
-
-        def empty_set_value(e: Expr) -> Expr:
-            """The aggregate expression evaluated over an empty input:
-            COUNT-family -> 0, every other aggregate -> NULL, with the
-            surrounding arithmetic kept (NULL propagates through it
-            exactly as SQL evaluates the empty-set subquery)."""
-            def repl(x: Expr) -> Expr:
-                if isinstance(x, AggFunc):
-                    if x.name.lower() in ("count", "count_if",
-                                          "approx_count_distinct"):
-                        return Lit(0)
-                    return Lit(None)
-                return x
-            return _rewrite_expr(e, repl)
-
-        out: Dict[str, Expr] = {}
-        for item, (cname, h) in zip(node.aggregates, val_helper.items()):
-            e = item.expr if isinstance(item, Alias) else item
-            # ALWAYS wrap: the empty-set value is non-NULL not only for
-            # COUNT but for any non-strict wrapper — COALESCE(SUM(x),0)
-            # over an empty correlated set is 0, not NULL. For plain
-            # strict aggregates the computed fallback is NULL and the
-            # coalesce is a no-op.
-            out[cname] = Func("coalesce", [Col(h), empty_set_value(e)])
-        return out
+        names = [f"__sq{n}_{i}" if i else f"__sq{n}"
+                 for i in range(len(node.aggregates))]
+        state["df"], agg_names = self._decorrelate_agg(
+            state["df"], state["outer_plan"], node, conds, body, names,
+            f"__sq{n}", "correlated scalar subquery")
+        state["cols"].extend(names)
+        return {a: Col(h) for a, h in zip(agg_names, names)}
 
     def _grouping(self, df: DataFrame, group_by):
         """Returns (GroupedData, key_names): key_names has one entry per
@@ -2876,6 +2468,123 @@ def _split_conjuncts(e: Expr):
         yield from _split_conjuncts(e.right)
     else:
         yield e
+
+
+_LATERAL_HOW = {"cross": "inner", "inner": "inner", "left": "left"}
+
+
+def _conj(cols):
+    """AND of a non-empty list of Spark columns."""
+    return functools.reduce(operator.and_, cols)
+
+
+def _is_outer_expr(e: Expr) -> bool:
+    """True when `e` references ONLY outer columns (no inner Col, no
+    subqueries): it can be evaluated on the outer frame verbatim, which
+    is what makes `inner_col = f(outer.col)` an equality key (r9 — the
+    composed fuzzer's first run hit the bare-OuterRef-only refusal on
+    `n_regionkey = t.k % 5`)."""
+    from .expressions import (
+        Exists, InSubquery, OuterRef, ScalarSubquery, walk)
+    ns = list(walk(e))
+    return (any(isinstance(x, OuterRef) for x in ns)
+            and not any(isinstance(
+                x, (Col, Exists, InSubquery, ScalarSubquery))
+                for x in ns))
+
+
+def _split_correlation(conds, what: str):
+    """Correlated conjuncts -> (pairs, theta): ``(inner Col, outer
+    expr)`` equality keys, and the residue (inequalities, expressions on
+    both sides). A subquery inside a correlated conjunct refuses — it
+    would have to be evaluated per outer row."""
+    from .expressions import (
+        BinaryOp, Exists, InSubquery, ScalarSubquery, walk)
+    pairs, theta = [], []
+    for c in conds:
+        if any(isinstance(x, (Exists, InSubquery, ScalarSubquery))
+               for x in walk(c)):
+            raise NotImplementedError(
+                f"{what}: correlation may not contain subqueries")
+        if isinstance(c, BinaryOp) and c.op == "=":
+            if isinstance(c.left, Col) and _is_outer_expr(c.right):
+                pairs.append((c.left, c.right))
+                continue
+            if isinstance(c.right, Col) and _is_outer_expr(c.left):
+                pairs.append((c.right, c.left))
+                continue
+        theta.append(c)
+    return pairs, theta
+
+
+def _outer_col(e: Expr, outer_df: DataFrame, outer_plan: Plan) -> Column:
+    """Spark column for an expression over outer columns: every OuterRef
+    resolves against the outer frame, the rest compiles as usual."""
+    from .expressions import OuterRef, SparkCol
+
+    def repl(x):
+        if isinstance(x, OuterRef):
+            return SparkCol(_resolve_outer(outer_df, x, outer_plan), x.name)
+        return x
+    return _rewrite_expr(e, repl).to_spark()
+
+
+def _outer_tuples(outer_df: DataFrame, outer_plan: Plan, pairs, theta,
+                  prefix: str):
+    """The DISTINCT outer correlation tuples: each equality pair's outer
+    expression and every outer ref inside the theta residue, as columns
+    ``{prefix}_k{i}`` / ``{prefix}_t{j}``. Returns (keyed, outer_cols,
+    on_inner): ``outer_cols`` are the same expressions on ``outer_df``
+    (in column order — join a frame carrying the tuple back with
+    eqNullSafe, so a NULL outer operand still finds its own tuple), and
+    ``on_inner(inner_df)`` is the INNER-join condition: keys equal plus
+    the theta residue with its outer refs read from the tuple. The
+    tuple frame is usually dimension-sized."""
+    from .expressions import OuterRef, SparkCol, walk
+
+    def ref_key(x):
+        return (x.table or "").lower(), x.name.lower()
+
+    refs = {}
+    for c in theta:
+        for x in walk(c):
+            if isinstance(x, OuterRef):
+                refs.setdefault(ref_key(x), x)
+    exprs = [r for _, r in pairs] + list(refs.values())
+    names = ([f"{prefix}_k{i}" for i in range(len(pairs))] +
+             [f"{prefix}_t{j}" for j in range(len(refs))])
+    outer_cols = [_outer_col(e, outer_df, outer_plan) for e in exprs]
+    keyed = outer_df.select(*[c.alias(n)
+                              for c, n in zip(outer_cols, names)]
+                            ).dropDuplicates()
+    ref_col = dict(zip(refs, names[len(pairs):]))
+
+    def on_inner(inner_df):
+        def repl(x):
+            if isinstance(x, OuterRef):
+                return SparkCol(keyed[ref_col[ref_key(x)]], x.name)
+            if isinstance(x, Col):
+                return SparkCol(inner_df[x.name], x.name)
+            return x
+        return _conj([keyed[n] == inner_df[a.name]
+                      for (a, _), n in zip(pairs, names)] +
+                     [_rewrite_expr(c, repl).to_spark() for c in theta])
+    return keyed, outer_cols, on_inner
+
+
+def _rank_filter(df: DataFrame, partition, sort, limit) -> DataFrame:
+    """Rows ranked (skip, skip+fetch] by row_number() over `partition`
+    in the Sort's key order — the LATERAL top-k window."""
+    from pyspark.sql import Window
+    win = Window.partitionBy(*partition).orderBy(
+        *[k.to_spark() for k in sort.keys])
+    lo = limit.skip or 0
+    rn = F.col("__lat_rn")
+    keep = rn > F.lit(lo)
+    if limit.fetch is not None:
+        keep = keep & (rn <= F.lit(lo + limit.fetch))
+    return (df.withColumn("__lat_rn", F.row_number().over(win))
+            .filter(keep).drop("__lat_rn"))
 
 
 def _extract_correlated(p: Plan):

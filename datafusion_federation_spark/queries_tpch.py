@@ -14,7 +14,8 @@ Reference parity: these shapes are the reference's own test corpus
 (datafusion-federation exercises TPC-H through DataFusion's planner;
 src/sql/mod.rs federates whatever subtree the optimizer leaves). The
 correlated-scalar shapes (h02/h17/h22) exercise compiler.py
-_attach_correlated_scalar; h15 exercises CTE reuse; h21 the
+_decorrelate_agg, the decorrelation kernel correlated scalar subqueries
+and LATERAL aggregate bodies share; h15 exercises CTE reuse; h21 the
 multi-EXISTS decorrelation; h13 the outer-join aggregate.
 """
 

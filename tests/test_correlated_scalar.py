@@ -2,10 +2,13 @@
 
 The reference forces correlated subtrees to stay local
 (optimizer/mod.rs:114-120) and relies on DataFusion's analyzer to
-decorrelate; our compiler lowers the ungrouped correlated aggregate to a
-GROUP BY over the correlation keys + LEFT join (compiler.py
-_attach_correlated_scalar). These tests pin the rewrite against DuckDB
-running the identical SQL.
+decorrelate; our compiler lowers the ungrouped correlated aggregate
+through the kernel LATERAL aggregate bodies share (compiler.py
+_decorrelate_agg, reached via _attach_correlated_scalar): a GROUP BY
+over the correlation keys (or, with a theta residue, over the DISTINCT
+outer tuples) LEFT-joined to the outer rows, a missing group taking the
+aggregates evaluated over an empty input. These tests pin the rewrite
+against DuckDB running the identical SQL.
 """
 
 from __future__ import annotations
@@ -63,7 +66,8 @@ def test_correlated_avg_arithmetic(spark):
 
 def test_correlated_count_coalesces_to_zero(spark):
     """COUNT over an empty correlated set must be 0, not NULL (the LEFT
-    join produces NULL; the rewrite coalesces count aggregates)."""
+    join produces NULL; a missing group takes the aggregates evaluated
+    over an empty input)."""
     from pyspark.sql import functions as F
     eng = _engine(spark, ["customer", "orders"])
     df = eng.sql("""
@@ -417,7 +421,7 @@ def test_correlated_scalar_theta_residue(spark):
     """Equality key + inequality residue: orders above the customer's
     own scaled balance — the theta filter is per-outer-row, so the
     grouped-by-inner-key shortcut is invalid and the keyed rewrite
-    must engage. Empty sets coalesce to COUNT=0."""
+    must engage. Empty sets give COUNT=0."""
     sql = """
     SELECT c_custkey,
            (SELECT CAST(COUNT(*) AS BIGINT) FROM orders o
@@ -603,3 +607,125 @@ def test_bnl_verdict_cache_invalidated_on_registration(spark):
     with _pt.raises(NotImplementedError, match="provably small"):
         eng.sql(sql).collect()
     assert eng.compiler._bnl_probe_count == 2
+
+
+# ---------------------------------------------------------------------------
+# one decorrelation kernel for scalar subqueries and LATERAL bodies: a
+# group whose value is NULL is not a missing group, a NULL theta operand
+# still finds its group, and an empty group takes the aggregates over an
+# empty input (not a COUNT-to-0 / everything-else-to-NULL guess)
+# ---------------------------------------------------------------------------
+
+_A_ROWS = [(0, 1, 1), (1, None, None), (2, 3, 3), (3, 2, 4), (4, 4, 4)]
+_B_ROWS = [(1, 10), (2, 20), (3, 30), (4, 40)]
+
+
+@pytest.fixture(scope="module")
+def ab(spark):
+    """a(id, k, j) with a NULL key row and b(x, v), local to the engine
+    and identical in DuckDB."""
+    from datafusion_federation_spark import FederationEngine
+    eng = FederationEngine(spark)
+    eng.register_local_df("a", spark.createDataFrame(
+        _A_ROWS, "id int, k int, j int"))
+    eng.register_local_df("b", spark.createDataFrame(
+        _B_ROWS, "x int, v int"))
+    con = duckdb.connect()
+    con.execute("CREATE TABLE a(id int, k int, j int)")
+    con.executemany("INSERT INTO a VALUES (?, ?, ?)", _A_ROWS)
+    con.execute("CREATE TABLE b(x int, v int)")
+    con.executemany("INSERT INTO b VALUES (?, ?)", _B_ROWS)
+    return eng, con
+
+
+@pytest.mark.parametrize("corr,c", [
+    ("s.s_nationkey = n.n_nationkey", 1),
+    ("s.s_nationkey = n.n_nationkey AND s.s_suppkey > n.n_regionkey", 1),
+    ("s.s_suppkey > n.n_nationkey", 5),
+])
+def test_correlated_scalar_null_valued_group_is_not_missing(spark, corr, c):
+    """nullif(count(*), c) is NULL for a group of exactly c rows. A
+    coalesce-based empty-group fixup cannot tell that NULL from a
+    missing group and returned 0 — on the equality, equality + theta
+    and pure-theta arms alike."""
+    sql = f"""
+    SELECT n.n_nationkey,
+           (SELECT nullif(count(*), {c}) FROM supplier s
+            WHERE {corr}) AS v
+    FROM nation n ORDER BY n.n_nationkey"""
+    got = [tuple(r) for r in
+           _engine(spark, ["nation", "supplier"]).sql(sql).collect()]
+    want = _duck(sql, ["nation", "supplier"])
+    assert got == want
+    assert any(v is None for _, v in want), "a NULL-valued group exists"
+
+
+@pytest.mark.parametrize("sql", [
+    "SELECT a.id, (SELECT count(*) FROM b WHERE b.x > coalesce(a.k, 0)) "
+    "AS v FROM a ORDER BY a.id",
+    "SELECT a.id, (SELECT sum(b.v) FROM b WHERE b.x > a.k OR a.k IS NULL) "
+    "AS v FROM a ORDER BY a.id",
+])
+def test_correlated_scalar_theta_null_outer_operand(ab, sql):
+    """A NULL outer operand inside a theta conjunct can still match
+    (coalesce, OR ... IS NULL): the group its tuple formed must join
+    back null-safe, not vanish under a plain `=`."""
+    eng, con = ab
+    got = [tuple(r) for r in eng.sql(sql).collect()]
+    want = con.execute(sql).fetchall()
+    assert got == want
+    assert dict(want)[1] not in (0, None), "id 1 (k NULL) has a group"
+
+
+def test_correlated_scalar_collect_list_unmatched_is_empty(spark):
+    """collect_list over an empty correlated set is [] — Spark SQL's
+    own answer for the identical query, and the LATERAL form's. DuckDB
+    disagrees (its list() over no rows is NULL), so the choice is pinned
+    here against spark.sql rather than DuckDB."""
+    from datafusion_federation_spark import FederationEngine
+    a = spark.createDataFrame([(r[0], r[1]) for r in _A_ROWS],
+                              "id int, k int")
+    b = spark.createDataFrame(_B_ROWS, "x int, v int")
+    eng = FederationEngine(spark)
+    eng.register_local_df("cl_a", a)
+    eng.register_local_df("cl_b", b)      # temp views spark.sql reads
+    sql = ("SELECT cl_a.id, (SELECT collect_list(cl_b.v) FROM cl_b "
+           "WHERE cl_b.x = cl_a.k) AS v FROM cl_a ORDER BY cl_a.id")
+    got = [tuple(r) for r in eng.sql(sql).collect()]
+    assert got == [tuple(r) for r in spark.sql(sql).collect()]
+    assert dict(got)[1] == []                  # k NULL: no group
+    lateral = ("SELECT cl_a.id, s.v FROM cl_a LEFT JOIN LATERAL ("
+               "SELECT collect_list(cl_b.v) AS v FROM cl_b "
+               "WHERE cl_b.x = cl_a.k) s ON TRUE ORDER BY cl_a.id")
+    assert [tuple(r) for r in eng.sql(lateral).collect()] == got
+    con = duckdb.connect()
+    con.execute("CREATE TABLE cl_a(id int, k int)")
+    con.executemany("INSERT INTO cl_a VALUES (?, ?)",
+                    [(r[0], r[1]) for r in _A_ROWS])
+    con.execute("CREATE TABLE cl_b(x int, v int)")
+    con.executemany("INSERT INTO cl_b VALUES (?, ?)", _B_ROWS)
+    duck = con.execute(sql.replace("collect_list", "list")).fetchall()
+    assert dict(duck)[1] is None               # DuckDB: NULL, not []
+
+
+@pytest.mark.parametrize("form", ["scalar", "lateral"])
+def test_duplicate_inner_key_with_theta_residue(ab, form):
+    """Two equality pairs on the SAME inner column plus a theta residue:
+    each pair keys the outer tuple separately (a row with k <> j has no
+    group), in the scalar form and the LATERAL form alike."""
+    eng, con = ab
+    corr = "b.x = a.k AND b.x = a.j AND b.v > a.id"
+    agg = "CAST(count(*) AS BIGINT) AS n, sum(b.v) AS s"
+    if form == "scalar":
+        sql = (f"SELECT a.id, (SELECT count(*) FROM b WHERE {corr}) AS n, "
+               f"(SELECT sum(b.v) FROM b WHERE {corr}) AS s "
+               f"FROM a ORDER BY a.id")
+    else:
+        sql = (f"SELECT a.id, t.n, t.s FROM a LEFT JOIN LATERAL ("
+               f"SELECT {agg} FROM b WHERE {corr}) t ON TRUE "
+               f"ORDER BY a.id")
+    got = [tuple(r) for r in eng.sql(sql).collect()]
+    want = con.execute(sql).fetchall()
+    assert got == want
+    assert {r[1] for r in want} == {0, 1}, "matched and unmatched rows"
+

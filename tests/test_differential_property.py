@@ -911,12 +911,71 @@ def test_lateral_shapes_local_and_federated_match_duckdb(engines, sql):
                  f"read_parquet('{TESTDATA}/nation.parquet')")
     want = sorted(map(tuple, conn.execute(sql).fetchall()))
     conn.close()
-    got_local = sorted(tuple(r) for r in local_eng.sql(sql).collect())
-    assert got_local == want, f"LOCAL diverged on: {sql}"
-    # the lateral body forces itself local, but the remote-engine run
-    # still exercises claim vetting + the left-input federation boundary
-    got_fed = sorted(tuple(r) for r in remote_eng.sql(sql).collect())
+    with _no_view_fallback(local_eng, remote_eng):
+        got_local = sorted(tuple(r) for r in local_eng.sql(sql).collect())
+        assert got_local == want, f"LOCAL diverged on: {sql}"
+        # the lateral body forces itself local, but the remote-engine
+        # run still exercises claim vetting + the left-input federation
+        # boundary
+        got_fed = sorted(tuple(r) for r in remote_eng.sql(sql).collect())
     assert got_fed == want, f"FEDERATED diverged on: {sql}"
+
+
+# ---------------------------------------------------------------------------
+# one correlated aggregate, two spellings: a scalar subquery and a LEFT
+# JOIN LATERAL body decorrelate through the same kernel, so each drawn
+# (correlation, aggregate) pair must match DuckDB in both forms —
+# including outer operands that are NULL (nullif(a.n_regionkey, 2)),
+# NULL-valued groups (nullif(COUNT(*), k)) and non-strict empty-group
+# values (COUNT(*) + 1, coalesce(SUM(...), -1)). nation is far below
+# theta_bnl_rows, so pure theta runs the broadcast-nested-loop arm.
+# ---------------------------------------------------------------------------
+
+_CORR_OUTER = ["a.n_regionkey", "nullif(a.n_regionkey, 2)"]
+
+
+@st.composite
+def _correlated_agg_pairs(draw):
+    kind = draw(st.sampled_from(["eq", "eq_theta", "theta"]))
+    o1 = draw(st.sampled_from(_CORR_OUTER))
+    o2 = draw(st.sampled_from(_CORR_OUTER + ["a.n_nationkey"]))
+    eq = f"b.n_regionkey = {o1}"
+    theta = draw(st.sampled_from([
+        f"b.n_nationkey > {o2}",
+        f"b.n_nationkey < coalesce({o2}, 3) * 5",
+        f"(b.n_nationkey > {o2} * 6 OR {o2} IS NULL)",
+    ]))
+    corr = {"eq": eq, "eq_theta": f"{eq} AND {theta}",
+            "theta": theta}[kind]
+    k = draw(st.integers(0, 5))
+    agg = draw(st.sampled_from([
+        "CAST(COUNT(*) AS BIGINT)", "COUNT(*) + 1", f"nullif(COUNT(*), {k})",
+        "coalesce(SUM(b.n_nationkey), -1)", "MAX(b.n_name)"]))
+    body = f"SELECT {agg} AS v FROM nation b WHERE {corr}"
+    scalar = (f"SELECT a.n_nationkey, ({body}) AS v FROM nation a")
+    lateral = (f"SELECT a.n_nationkey, s.v FROM nation a "
+               f"LEFT JOIN LATERAL ({body}) s ON TRUE")
+    return scalar, lateral
+
+
+@settings(max_examples=30, deadline=None, derandomize=True,
+          suppress_health_check=[HealthCheck.function_scoped_fixture,
+                                 HealthCheck.too_slow])
+@given(pair=_correlated_agg_pairs())
+def test_correlated_agg_scalar_and_lateral_match_duckdb(engines, pair):
+    import duckdb
+    local_eng, remote_eng = engines
+    conn = duckdb.connect()
+    conn.execute(f"CREATE VIEW nation AS SELECT * FROM "
+                 f"read_parquet('{TESTDATA}/nation.parquet')")
+    with _no_view_fallback(local_eng, remote_eng):
+        for sql in pair:
+            want = sorted(map(tuple, conn.execute(sql).fetchall()))
+            for name, eng in (("LOCAL", local_eng),
+                              ("FEDERATED", remote_eng)):
+                got = sorted(tuple(r) for r in eng.sql(sql).collect())
+                assert got == want, f"{name} diverged on: {sql}"
+    conn.close()
 
 
 # ---------------------------------------------------------------------------
@@ -1493,9 +1552,11 @@ def test_composed_shapes_local_and_federated_match_duckdb(engines, pair):
                  f"read_parquet('{TESTDATA}/nation.parquet')")
     want = _nsort(map(tuple, conn.execute(duck_sql).fetchall()))
     conn.close()
-    got_local = _nsort(tuple(r) for r in local_eng.sql(eng_sql).collect())
-    assert got_local == want, f"LOCAL diverged on: {eng_sql}"
-    got_fed = _nsort(tuple(r) for r in remote_eng.sql(eng_sql).collect())
+    with _no_view_fallback(local_eng, remote_eng):
+        got_local = _nsort(tuple(r)
+                           for r in local_eng.sql(eng_sql).collect())
+        assert got_local == want, f"LOCAL diverged on: {eng_sql}"
+        got_fed = _nsort(tuple(r) for r in remote_eng.sql(eng_sql).collect())
     assert got_fed == want, f"FEDERATED diverged on: {eng_sql}"
 
 

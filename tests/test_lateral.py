@@ -4,8 +4,10 @@ Engines evaluate a LATERAL subquery once per outer row; the compiler
 decorrelates to set-level plans instead (test_lateral pins each arm's
 values against DuckDB running the identical SQL):
 - plain body            -> equi/theta join
-- ungrouped aggregate   -> grouped agg + DISTINCT-outer-keys LEFT join
-                           with true empty-group values + join back
+- ungrouped aggregate   -> the kernel correlated scalar subqueries share:
+                           grouped agg per DISTINCT outer tuple, empty
+                           groups take the aggregates over an empty
+                           input, joined back
 - ORDER BY + LIMIT k    -> partitioned row_number <= k + join
 
 Refusals are loud (NotImplementedError) for shapes with no faithful
@@ -212,9 +214,9 @@ ORDER BY n.n_name LIMIT 3""").plan
 
 
 def test_lateral_agg_remote_body_executes_remote_once(spark):
-    # review r7 s3 finding #8: the empty-group fixup compiles the body
-    # a second time — the pinned static leaf must keep that to ONE
-    # remote execution
+    # review r7 s3 finding #8: the remote body must execute at most
+    # once at compile time — the empty-group row is derived from the
+    # same compiled body, never a second compile
     from datafusion_federation_spark.engine import FederationEngine
     from datafusion_federation_spark.sources.provider import (
         DuckDBExecutor, SQLProvider)
@@ -240,6 +242,50 @@ FROM customer c LEFT JOIN LATERAL (
     df.collect()
     assert calls["n"] == n_compile, "action re-fired the remote read"
     assert n_compile <= 1, f"remote executed {n_compile}x at compile"
+
+
+def test_lateral_agg_build_and_explain_jobs_match_scalar(spark, monkeypatch):
+    # the equality LATERAL aggregate compiles its body ONCE and joins
+    # the empty-group row in the plan: a build (engine.sql, no action)
+    # and a plain explain run no more Spark jobs than the scalar-
+    # subquery spelling of the same query, and no driver collect()
+    from pyspark.sql import DataFrame
+
+    from datafusion_federation_spark.engine import FederationEngine
+    eng = FederationEngine(spark)
+    for t in ("customer", "orders"):
+        eng.register_local_parquet(t, f"{TESTDATA}/{t}.parquet")
+    body = ("SELECT CAST(COUNT(*) AS BIGINT) {} FROM orders o "
+            "WHERE o.o_custkey = c.c_custkey")
+    lateral = (f"SELECT c.c_custkey, s.n FROM customer c LEFT JOIN "
+               f"LATERAL ({body.format('AS n')}) s ON TRUE")
+    scalar = f"SELECT c.c_custkey, ({body.format('')}) AS n FROM customer c"
+    sc = spark.sparkContext
+    collects = []
+    real_collect = DataFrame.collect
+
+    def counting_collect(self):
+        collects.append(1)
+        return real_collect(self)
+
+    def jobs(tag, fn):
+        sc.setJobGroup(tag, tag)
+        try:
+            fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return len(sc.statusTracker().getJobIdsForGroup(tag))
+
+    monkeypatch.setattr(DataFrame, "collect", counting_collect)
+    for form, sql in (("lateral", lateral), ("scalar", scalar)):
+        eng.sql(sql)                      # warm: first-touch file listing
+    for step, fn in (("build", eng.sql),
+                     ("explain",
+                      lambda q: eng.explain(eng.sql_plan(q).plan))):
+        n_lat = jobs(f"lat_{step}", lambda: fn(lateral))
+        n_sc = jobs(f"sc_{step}", lambda: fn(scalar))
+        assert n_lat <= n_sc, f"{step}: LATERAL {n_lat} jobs, scalar {n_sc}"
+    assert not collects, "decorrelation collected at compile time"
 
 
 def test_lateral_select_star_no_helper_columns(lat):
