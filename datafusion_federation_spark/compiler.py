@@ -14,6 +14,14 @@ cast projection is appended only when the remote result differs from
 that schema in a column name or type; a strongly typed Arrow remote
 usually matches it already. The cast target is inferred here and nowhere
 else (``_remote_schema``).
+
+Correlated subqueries decorrelate into joins. Every correlated condition
+(EXISTS, (NOT) IN, LATERAL, the correlated aggregate kernel
+``_decorrelate_agg``) becomes a Spark column through one binder,
+``_bind_correlated``: outer references resolve against the outer frame
+or the outer-tuple columns, inner columns against the subquery frame,
+and the rest compiles through ``Expr.to_spark()``, so a correlation may
+use any expression the local path compiles.
 """
 
 from __future__ import annotations
@@ -182,13 +190,6 @@ class Compiler:
                 df = (self.spark.read
                       .format(getattr(t, "fallback_format", "parquet"))
                       .load(t.fallback_path))
-            elif t.provider is not None and hasattr(t.provider, "executor"):
-                # fallback provider path: whole-table remote read
-                # (FederatedTableProviderAdaptor fallback,
-                # reference src/table_provider.rs:110-124)
-                ref = t.remote_sql_ref(t.provider.dialect)
-                df = t.provider.executor.execute(
-                    self.spark, f"SELECT * FROM {ref}")
             else:
                 df = self.spark.table(t.local_name)
             if p.projection:
@@ -206,14 +207,13 @@ class Compiler:
 
         if isinstance(p, Filter):
             from .expressions import (
-                BinaryOp, Exists, InSubquery, ScalarSubquery,
-                walk as walk_expr)
+                Exists, InSubquery, and_all, conjuncts, walk as walk_expr)
             pred = _rewrite_expr(p.predicate, self._rewrite_quantifier)
             nodes = list(walk_expr(pred))
             if any(isinstance(n, (Exists, InSubquery)) for n in nodes):
                 # EXISTS / IN-subquery predicates compile as joins; they
                 # may appear as AND-conjuncts mixed with plain predicates
-                conj = list(_split_conjuncts(pred))
+                conj = conjuncts(pred)
                 subq = [c for c in conj
                         if isinstance(c, (Exists, InSubquery))]
                 plain = [c for c in conj
@@ -226,10 +226,7 @@ class Compiler:
                             "conjuncts in a Filter")
                 df = self._c(p.input)
                 if plain:
-                    pp = plain[0]
-                    for k in plain[1:]:
-                        pp = BinaryOp("AND", pp, k)
-                    df = self._filter_plain(df, pp, p.input)
+                    df = self._filter_plain(df, and_all(plain), p.input)
                 for c in subq:
                     df = self._apply_subquery_pred(df, c, p.input)
                 return df
@@ -1095,8 +1092,7 @@ class Compiler:
         right_df = self._c(cleaned)
 
         if limit is not None:
-            pairs, theta = _split_correlation(
-                conds, "LATERAL ORDER BY/LIMIT")
+            pairs, theta = _split_correlation(conds)
             if theta:
                 # r9: theta residue (inequalities alongside equality
                 # keys) takes the join-then-window arm — the per-outer-
@@ -1111,21 +1107,17 @@ class Compiler:
 
         if alias:
             right_df = right_df.alias(alias)
-        jc = None
-        for c in conds:
-            cc = _corr_to_spark(c, left_df, right_df, p.left)
-            jc = cc if jc is None else (jc & cc)
+        jc = [_bind_correlated(c, left_df, right_df, p.left) for c in conds]
         if on_expr is not None:
-            oc = on_expr.to_spark()
-            jc = oc if jc is None else (jc & oc)
+            jc.append(on_expr.to_spark())
         how = _LATERAL_HOW[p.how]
-        if jc is None:
+        if not jc:
             if how == "inner":
                 joined = left_df.crossJoin(right_df)
             else:
                 joined = left_df.join(right_df, on=F.lit(True), how=how)
         else:
-            joined = left_df.join(right_df, on=jc, how=how)
+            joined = left_df.join(right_df, on=_conj(jc), how=how)
         # drop the widened correlation-key / hidden-sort helper columns:
         # SELECT * must see exactly left.* + the body's declared outputs
         # (review r7 s3 finding #3). Unknown output lists (a star body)
@@ -1199,7 +1191,7 @@ class Compiler:
 
         conds, cleaned_in = _extract_correlated(agg.input)
         self._pin_static_leaves(cleaned_in)
-        pairs, theta = _split_correlation(conds, "grouped LATERAL aggregate")
+        pairs, theta = _split_correlation(conds)
         if theta:
             raise NotImplementedError(
                 "grouped LATERAL aggregate needs pure equality "
@@ -1225,8 +1217,8 @@ class Compiler:
                                    list(agg.aggregates)))
         if alias:
             agg_df = agg_df.alias(alias)
-        jc = _conj([_outer_col(r, left_df, p.left) == agg_df[a.name]
-                    for a, r in pairs])
+        jc = _conj([_bind_correlated(r, left_df, outer_plan=p.left)
+                    == agg_df[a.name] for a, r in pairs])
         joined = left_df.join(agg_df, on=jc, how=how)
         out_cols = _plan_output_cols(p.right)
         if out_cols is not None:
@@ -1270,7 +1262,7 @@ class Compiler:
         of the body plus hash joins (pure theta: a broadcast nested
         loop bounded by the gate); the empty row is broadcast."""
         from .expressions import walk
-        pairs, theta = _split_correlation(conds, what)
+        pairs, theta = _split_correlation(conds)
         body = _widen_projects(
             body, [a.name for a, _ in pairs] +
             [x.name for c in theta for x in walk(c) if isinstance(x, Col)])
@@ -1306,7 +1298,8 @@ class Compiler:
         if alias is None:
             probe = outer_df
             probe_keys = outer_cols if theta else [
-                _outer_col(r, outer_df, outer_plan) for _, r in pairs]
+                _bind_correlated(r, outer_df, outer_plan=outer_plan)
+                for _, r in pairs]
         else:
             probe = keyed
             probe_keys = [keyed[h] for h in keyed.columns]
@@ -1343,7 +1336,7 @@ class Compiler:
         right timestamp is always ``<ts>_right``. The federated arm
         (DuckDB renders native ASOF) is schema-aligned by the engine's
         expected-schema cast like every remote plan."""
-        from .expressions import BinaryOp
+        from .expressions import BinaryOp, conjuncts
         from .federation import _visible_aliases
         from .operators.temporal import asof_join
 
@@ -1356,11 +1349,6 @@ class Compiler:
 
         left_al = aliases(p.left)
         right_al = aliases(p.right)
-
-        def conjuncts(e):
-            if isinstance(e, BinaryOp) and e.op.upper() == "AND":
-                return conjuncts(e.left) + conjuncts(e.right)
-            return [e]
 
         def side_of(c):
             if not isinstance(c, Col) or not c.table:
@@ -2156,10 +2144,8 @@ class Compiler:
                     cleaned = cleaned.input
             sub = self._c(cleaned)
             if conds:
-                on = None
-                for c in conds:
-                    sc = _corr_to_spark(c, df, sub, outer_plan)
-                    on = sc if on is None else (on & sc)
+                on = _conj([_bind_correlated(c, df, sub, outer_plan)
+                            for c in conds])
                 return df.join(sub, on=on, how=how)
             # uncorrelated EXISTS: keep-all or keep-none
             return df.join(sub.limit(1), how=how,
@@ -2282,10 +2268,8 @@ class Compiler:
         # uncorrelated arm renames __in_sq for — review r5, reproduced)
         df2 = df.withColumn("__in_probe", pred.expr.to_spark())
         x = df2["__in_probe"]
-        corr = None
-        for c in conds:
-            sc = _corr_to_spark(c, df2, sub, outer_plan)
-            corr = sc if corr is None else (corr & sc)
+        corr = _conj([_bind_correlated(c, df2, sub, outer_plan)
+                      for c in conds])
         if not pred.negated:
             return (df2.join(sub, on=corr & (y == x), how="left_semi")
                     .drop("__in_probe"))
@@ -2461,15 +2445,6 @@ def _resolve_outer(outer_df: DataFrame, ref, outer_plan: Plan = None) -> Any:
     return outer_df[ref.name]
 
 
-def _split_conjuncts(e: Expr):
-    from .expressions import BinaryOp
-    if isinstance(e, BinaryOp) and e.op.upper() == "AND":
-        yield from _split_conjuncts(e.left)
-        yield from _split_conjuncts(e.right)
-    else:
-        yield e
-
-
 _LATERAL_HOW = {"cross": "inner", "inner": "inner", "left": "left"}
 
 
@@ -2479,33 +2454,25 @@ def _conj(cols):
 
 
 def _is_outer_expr(e: Expr) -> bool:
-    """True when `e` references ONLY outer columns (no inner Col, no
-    subqueries): it can be evaluated on the outer frame verbatim, which
-    is what makes `inner_col = f(outer.col)` an equality key (r9 — the
-    composed fuzzer's first run hit the bare-OuterRef-only refusal on
+    """True when `e` references ONLY outer columns (no inner Col; a
+    correlated conjunct holds no subquery, _extract_correlated refuses
+    one): it can be evaluated on the outer frame verbatim, which is what
+    makes `inner_col = f(outer.col)` an equality key (r9 — the composed
+    fuzzer's first run hit the bare-OuterRef-only refusal on
     `n_regionkey = t.k % 5`)."""
-    from .expressions import (
-        Exists, InSubquery, OuterRef, ScalarSubquery, walk)
+    from .expressions import OuterRef, walk
     ns = list(walk(e))
     return (any(isinstance(x, OuterRef) for x in ns)
-            and not any(isinstance(
-                x, (Col, Exists, InSubquery, ScalarSubquery))
-                for x in ns))
+            and not any(isinstance(x, Col) for x in ns))
 
 
-def _split_correlation(conds, what: str):
+def _split_correlation(conds):
     """Correlated conjuncts -> (pairs, theta): ``(inner Col, outer
     expr)`` equality keys, and the residue (inequalities, expressions on
-    both sides). A subquery inside a correlated conjunct refuses — it
-    would have to be evaluated per outer row."""
-    from .expressions import (
-        BinaryOp, Exists, InSubquery, ScalarSubquery, walk)
+    both sides)."""
+    from .expressions import BinaryOp
     pairs, theta = [], []
     for c in conds:
-        if any(isinstance(x, (Exists, InSubquery, ScalarSubquery))
-               for x in walk(c)):
-            raise NotImplementedError(
-                f"{what}: correlation may not contain subqueries")
         if isinstance(c, BinaryOp) and c.op == "=":
             if isinstance(c.left, Col) and _is_outer_expr(c.right):
                 pairs.append((c.left, c.right))
@@ -2517,14 +2484,26 @@ def _split_correlation(conds, what: str):
     return pairs, theta
 
 
-def _outer_col(e: Expr, outer_df: DataFrame, outer_plan: Plan) -> Column:
-    """Spark column for an expression over outer columns: every OuterRef
-    resolves against the outer frame, the rest compiles as usual."""
+def _bind_correlated(e: Expr, outer, inner_df: DataFrame = None,
+                     outer_plan: Plan = None) -> Column:
+    """The one binder of a correlated expression to a Spark column. An
+    OuterRef resolves against ``outer``: the outer frame (through
+    _resolve_outer, ``outer_plan`` proving provenance) or a callable
+    returning the outer-tuple column for the ref. A plain Col resolves
+    against ``inner_df`` when given — the subquery side of the join,
+    which keeps a name both sides carry unambiguous. Everything else
+    compiles through Expr.to_spark(), so a correlation may use any
+    expression the local path compiles (`o.k = abs(l.k)`, CASE,
+    IN-lists)."""
     from .expressions import OuterRef, SparkCol
 
     def repl(x):
         if isinstance(x, OuterRef):
-            return SparkCol(_resolve_outer(outer_df, x, outer_plan), x.name)
+            c = (_resolve_outer(outer, x, outer_plan)
+                 if isinstance(outer, DataFrame) else outer(x))
+            return SparkCol(c, x.name)
+        if inner_df is not None and isinstance(x, Col):
+            return SparkCol(inner_df[x.name], x.name)
         return x
     return _rewrite_expr(e, repl).to_spark()
 
@@ -2540,7 +2519,7 @@ def _outer_tuples(outer_df: DataFrame, outer_plan: Plan, pairs, theta,
     ``on_inner(inner_df)`` is the INNER-join condition: keys equal plus
     the theta residue with its outer refs read from the tuple. The
     tuple frame is usually dimension-sized."""
-    from .expressions import OuterRef, SparkCol, walk
+    from .expressions import OuterRef, walk
 
     def ref_key(x):
         return (x.table or "").lower(), x.name.lower()
@@ -2553,22 +2532,20 @@ def _outer_tuples(outer_df: DataFrame, outer_plan: Plan, pairs, theta,
     exprs = [r for _, r in pairs] + list(refs.values())
     names = ([f"{prefix}_k{i}" for i in range(len(pairs))] +
              [f"{prefix}_t{j}" for j in range(len(refs))])
-    outer_cols = [_outer_col(e, outer_df, outer_plan) for e in exprs]
+    outer_cols = [_bind_correlated(e, outer_df, outer_plan=outer_plan)
+                  for e in exprs]
     keyed = outer_df.select(*[c.alias(n)
                               for c, n in zip(outer_cols, names)]
                             ).dropDuplicates()
     ref_col = dict(zip(refs, names[len(pairs):]))
 
     def on_inner(inner_df):
-        def repl(x):
-            if isinstance(x, OuterRef):
-                return SparkCol(keyed[ref_col[ref_key(x)]], x.name)
-            if isinstance(x, Col):
-                return SparkCol(inner_df[x.name], x.name)
-            return x
+        def tuple_col(x):
+            return keyed[ref_col[ref_key(x)]]
         return _conj([keyed[n] == inner_df[a.name]
                       for (a, _), n in zip(pairs, names)] +
-                     [_rewrite_expr(c, repl).to_spark() for c in theta])
+                     [_bind_correlated(c, tuple_col, inner_df)
+                      for c in theta])
     return keyed, outer_cols, on_inner
 
 
@@ -2596,22 +2573,28 @@ def _extract_correlated(p: Plan):
     Only the Filter/Project/SubqueryAlias spine is traversed: hoisting a
     filter out from BELOW an Aggregate/Distinct/Limit would change which
     rows participate, i.e. silently wrong results. A correlated
-    reference below such a node raises instead."""
-    from .expressions import BinaryOp, OuterRef, walk
+    reference below such a node raises instead, and so does a subquery
+    inside a correlated conjunct: it would have to be evaluated per
+    outer row."""
+    from .expressions import (
+        Exists, InSubquery, OuterRef, ScalarSubquery, and_all, conjuncts,
+        walk)
     conds: List[Expr] = []
 
     def visit(node: Plan) -> Plan:
         if isinstance(node, Filter) and _has_outer_ref(node.predicate):
-            parts = list(_split_conjuncts(node.predicate))
+            parts = conjuncts(node.predicate)
             keep = [c for c in parts if not _has_outer_ref(c)]
-            conds.extend(c for c in parts if _has_outer_ref(c))
+            corr = [c for c in parts if _has_outer_ref(c)]
+            if any(isinstance(x, (Exists, InSubquery, ScalarSubquery))
+                   for c in corr for x in walk(c)):
+                raise NotImplementedError(
+                    "a correlated conjunct may not contain a subquery")
+            conds.extend(corr)
             child = visit(node.input)
             if not keep:
                 return child
-            pred = keep[0]
-            for k in keep[1:]:
-                pred = BinaryOp("AND", pred, k)
-            return Filter(child, pred)
+            return Filter(child, and_all(keep))
         if isinstance(node, (Filter, Project, SubqueryAlias)):
             new_inputs = [visit(i) for i in node.inputs()]
             if any(n is not o for n, o in zip(new_inputs, node.inputs())):
@@ -2630,40 +2613,6 @@ def _extract_correlated(p: Plan):
         return node
 
     return conds, visit(p)
-
-
-def _corr_to_spark(e: Expr, outer_df: DataFrame, sub_df: DataFrame,
-                   outer_plan: Plan = None):
-    """Render a correlated predicate as a Spark join condition: OuterRef
-    columns resolve against the outer DataFrame, plain columns against
-    the subquery DataFrame (disambiguates colliding names)."""
-    from .expressions import (
-        Between, BinaryOp, Col, InList, IsNotNull, IsNull, Lit, Not,
-        OuterRef)
-    if isinstance(e, OuterRef):
-        return _resolve_outer(outer_df, e, outer_plan)
-    if isinstance(e, Col):
-        return sub_df[e.name]
-    if isinstance(e, Lit):
-        return F.lit(e.value)
-    if isinstance(e, BinaryOp):
-        from .expressions import _SQL_TO_SPARK_BIN
-        return _SQL_TO_SPARK_BIN[e.op.upper()](
-            _corr_to_spark(e.left, outer_df, sub_df, outer_plan),
-            _corr_to_spark(e.right, outer_df, sub_df, outer_plan))
-    if isinstance(e, Not):
-        return ~_corr_to_spark(e.expr, outer_df, sub_df, outer_plan)
-    if isinstance(e, IsNull):
-        return _corr_to_spark(e.expr, outer_df, sub_df, outer_plan).isNull()
-    if isinstance(e, IsNotNull):
-        return _corr_to_spark(
-            e.expr, outer_df, sub_df, outer_plan).isNotNull()
-    if isinstance(e, Between):
-        return _corr_to_spark(e.expr, outer_df, sub_df, outer_plan).between(
-            _corr_to_spark(e.low, outer_df, sub_df, outer_plan),
-            _corr_to_spark(e.high, outer_df, sub_df, outer_plan))
-    raise NotImplementedError(
-        f"correlated predicate form {type(e).__name__} not supported")
 
 
 def _cast_changes(actual, expected) -> bool:

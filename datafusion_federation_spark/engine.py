@@ -291,8 +291,7 @@ class FederationEngine:
                     f"driver; compute it explicitly and use "
                     f"engine.insert_into(name, df)")
             d = h.provider.dialect
-            tbl = (h.remote.ref.to_sql(d) if h.remote is not None
-                   else d.quote_table(name))
+            tbl = h.remote_sql_ref(d)
             collist = ("" if not cols
                        else " (" + ", ".join(d.quote(c) for c in cols)
                        + ")")
@@ -447,9 +446,7 @@ class FederationEngine:
                 f"insert_into(name, df, mode='overwrite'), or "
                 f"register the table on a remote engine")
         d = h.provider.dialect
-        tbl = (h.remote.ref.to_sql(d) if h.remote is not None
-               else d.quote_table(name))
-        return h, d, tbl
+        return h, d, h.remote_sql_ref(d)
 
     def _inline_dml_subqueries(self, e, verb: str, provider) -> None:
         """Subqueries in a DML predicate/value (r13, VERDICT r12 Next

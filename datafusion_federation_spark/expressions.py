@@ -12,6 +12,16 @@ to render themselves two ways:
   residue of a federated plan executes on Catalyst/Tungsten (JVM-side,
   whole-stage codegen — no Python UDFs in this module).
 
+Where the pyspark API has no counterpart (a higher-order call with a
+lambda, a function pyspark does not expose, a DISTINCT aggregate other
+than count/sum) ``to_spark()`` hands Spark SQL text to ``F.expr``. That
+text comes from ``to_sql(get_dialect("spark"))``, the same dialect the
+unparser uses for a Spark remote, so literals (decimals, bytes) and
+IS [NOT] DISTINCT FROM read back as ``spark.sql`` reads them.
+
+``conjuncts`` / ``and_all`` split and rebuild AND chains for every pass
+that works conjunct by conjunct.
+
 Scale note: every node compiles to built-in Spark SQL expressions, so plans
 built from this IR stay inside whole-stage codegen and benefit from predicate
 pushdown / column pruning at any data size.
@@ -19,13 +29,14 @@ pushdown / column pruning at any data size.
 
 from __future__ import annotations
 
-import datetime as _dt
 import re
 from dataclasses import dataclass
 from typing import Any, Optional, Sequence
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
+
+from .dialects import get_dialect
 
 
 class Expr:
@@ -623,7 +634,7 @@ class Func(Expr):
             # higher-order call: Spark SQL parses the arrow syntax
             # natively, and the param Cols render as plain (quoted)
             # identifiers that bind to the lambda scope
-            return F.expr(self.to_sql(_SPARK_DIALECT))
+            return F.expr(self.to_sql(get_dialect("spark")))
         fn = getattr(F, self.name, None)
         if fn is not None:
             try:
@@ -635,7 +646,7 @@ class Func(Expr):
                 pass
         # Fall back to Spark's SQL expression builder for anything
         # pyspark.sql.functions does not expose under the same name.
-        return F.expr(self.to_sql(_SPARK_DIALECT))
+        return F.expr(self.to_sql(get_dialect("spark")))
 
     def output_name(self) -> str:
         return self.name
@@ -734,7 +745,8 @@ class AggFunc(Expr):
             if name == "sum":
                 return F.sum_distinct(*cols)
             # other DISTINCT aggregates via Spark SQL expression text
-            inner = ", ".join(a.to_sql(_SPARK_DIALECT) for a in args)
+            d = get_dialect("spark")
+            inner = ", ".join(a.to_sql(d) for a in args)
             return F.expr(f"{name}(DISTINCT {inner})")
         if name == "count" and not cols:
             return F.count(F.lit(1))
@@ -1693,40 +1705,17 @@ def walk(e: Expr):
         yield from walk(c)
 
 
-class _SparkSQLDialectProxy:
-    """Minimal dialect used when Func falls back to F.expr(...)."""
-
-    ilike_op = "ILIKE"
-    supports_lambda = True    # Spark SQL parses `x -> body` natively
-
-    def quote(self, s: str) -> str:
-        return f"`{s}`"
-
-    def literal(self, v: Any) -> str:
-        if v is None:
-            return "NULL"
-        if isinstance(v, bool):
-            return "TRUE" if v else "FALSE"
-        if isinstance(v, str):
-            return "'" + v.replace("'", "''") + "'"
-        if isinstance(v, _dt.datetime):
-            return f"TIMESTAMP '{v.isoformat(sep=' ')}'"
-        if isinstance(v, _dt.date):
-            return f"DATE '{v.isoformat()}'"
-        return repr(v)
-
-    def type_name(self, t: str) -> str:
-        return t.upper()
-
-    def scalar_function(self, name: str, args) -> str:
-        return f"{name}({', '.join(args)})"
-
-    def agg_function(self, name: str) -> str:
-        return name.upper()
-
-    def regex_match(self, expr: str, pat: str, negated: bool) -> str:
-        s = f"{expr} RLIKE {pat}"
-        return f"(NOT {s})" if negated else s
+def conjuncts(e: Expr) -> list:
+    """The AND-conjuncts of ``e`` in source order (``[e]`` when ``e`` is
+    not an AND)."""
+    if isinstance(e, BinaryOp) and e.op.upper() == "AND":
+        return conjuncts(e.left) + conjuncts(e.right)
+    return [e]
 
 
-_SPARK_DIALECT = _SparkSQLDialectProxy()
+def and_all(es: Sequence[Expr]) -> Expr:
+    """Left-deep AND of a non-empty sequence of expressions."""
+    out = es[0]
+    for e in es[1:]:
+        out = BinaryOp("AND", out, e)
+    return out

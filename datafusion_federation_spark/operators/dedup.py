@@ -195,8 +195,8 @@ def shingle_table(df: DataFrame, text_col: str, id_col: str,
     retains it, and ``n_sh = size(arr)`` is O(1) per exploded row — so
     consumers that need per-doc set sizes (the Jaccard union term) read
     them off the rows they already hold instead of re-running the
-    gram build in a second scan (the r13 row-local ``shingle_counts``
-    form, measured +0.3–0.4 s on d03: one full normalize+zip_with pass
+    gram build in a second scan (the r13 row-local
+    ``size(word_shingles(...))`` form, measured +0.3–0.4 s on d03: one full normalize+zip_with pass
     PER size reference with no exchange for ReuseExchange to dedupe) or
     re-aggregating the explode (the pre-r13 form)."""
     arr = _fan_out(df).select(
@@ -233,23 +233,6 @@ def shingle_table(df: DataFrame, text_col: str, id_col: str,
             .filter(F.col("__p").isNotNull())
             .select(F.col(id_col), F.col("__p.shingle").alias("shingle"),
                     F.col("__p.n_sh").alias("n_sh")))
-
-
-def shingle_counts(df: DataFrame, text_col: str, id_col: str,
-                   n: int = 3) -> DataFrame:
-    """(id, n_sh): per-doc DISTINCT shingle-set size as a ROW-LOCAL
-    expression — size(word_shingles(...)) — exactly the value
-    ``shingle_table(...).groupBy(id).count()`` produces (the explode
-    emits one row per distinct shingle), without re-running the ~200x
-    shingle explode plus an aggregate exchange for a number each row
-    already knows about itself (r13 optimization round, guide §2.3
-    "aggregate before you shuffle" taken to its limit: no shuffle at
-    all). NULL-text docs are dropped (they produce no shingle rows in
-    the explode form either, so consumers joining on id see identical
-    inputs)."""
-    n_sh = F.size(word_shingles(F.col(text_col), n))
-    return (df.select(F.col(id_col), n_sh.cast("long").alias("n_sh"))
-            .filter(F.col("n_sh") >= 1))
 
 
 # ---------------------------------------------------------------------------
@@ -646,12 +629,7 @@ def verify_candidates(df: DataFrame, cand: DataFrame, text_col: str,
     # with_size=True; r14 optimization round, guide §2.3): the union
     # term is carried through the intersection join instead of joined
     # back from a separate sizes frame — two joins and two extra
-    # gram-build scans removed. A prebuilt `_sh` without n_sh (external
-    # caller on the old schema) falls back to attaching the row-local
-    # sizes once, here, before the rename.
-    if "n_sh" not in sh.columns:
-        sh = sh.join(shingle_counts(df, text_col, id_col, shingle_n),
-                     id_col)
+    # gram-build scans removed. A prebuilt `_sh` must carry n_sh too.
     sh_a = sh.select(F.col(id_col).alias("id_a"),
                      F.col("shingle").alias("sh_a"),
                      F.col("n_sh").alias("na"))

@@ -34,7 +34,7 @@ from typing import List, Optional, Sequence
 from .expressions import (
     AggFunc, Alias, BinaryOp, Col, Exists, Expr, Func, InSubquery,
     OuterRef, Placeholder, ScalarSubquery, ScalarVariable, SetComparison,
-    Star, WindowFunc, walk,
+    Star, WindowFunc, and_all, conjuncts, walk,
 )
 from .plans.nodes import (
     Filter, Join, Plan, Project, SubqueryAlias,
@@ -42,18 +42,6 @@ from .plans.nodes import (
 
 _NONDETERMINISTIC = {"rand", "random", "randn", "uuid", "shuffle",
                      "monotonically_increasing_id"}
-
-
-def _conjuncts(e: Expr):
-    from .compiler import _split_conjuncts
-    return _split_conjuncts(e)
-
-
-def _and_all(conjs: Sequence[Expr]) -> Expr:
-    out = conjs[0]
-    for c in conjs[1:]:
-        out = BinaryOp("AND", out, c)
-    return out
 
 
 def _movable(e: Expr) -> bool:
@@ -188,7 +176,7 @@ def _push_filters_node(plan: Plan, _memo: dict) -> Plan:
     if not isinstance(plan, Filter):
         return plan
 
-    conjs = list(_conjuncts(plan.predicate))
+    conjs = conjuncts(plan.predicate)
     target = plan.input
     kept: List[Expr] = []
     changed = False
@@ -210,7 +198,7 @@ def _push_filters_node(plan: Plan, _memo: dict) -> Plan:
     # continues down through further joins/projects
     target = push_filters(target, _memo)
     if kept:
-        return Filter(target, _and_all(kept))
+        return Filter(target, and_all(kept))
     return target
 
 

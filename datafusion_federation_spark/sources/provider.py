@@ -99,11 +99,8 @@ def arrow_to_spark(spark, arrow, schema=None):
     schema since nothing can be inferred from an empty frame."""
     if arrow.num_rows == 0 and schema is not None:
         return empty_dataframe(spark, schema)
-    try:
-        # Spark 4: Arrow table -> DataFrame directly (no pandas hop)
-        return spark.createDataFrame(arrow)
-    except Exception:
-        return spark.createDataFrame(arrow.to_pandas())
+    # Spark 4: Arrow table -> DataFrame directly (no pandas hop)
+    return spark.createDataFrame(arrow)
 
 
 class FederationProvider:

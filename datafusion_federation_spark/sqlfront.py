@@ -2590,16 +2590,8 @@ def _validate_supported(plan: Plan) -> None:
     (when remote queries may already have fired). Currently: EXISTS/IN
     subqueries are only supported as top-level AND-conjuncts of a
     Filter."""
-    from .expressions import Exists, InSubquery, walk
+    from .expressions import Exists, InSubquery, conjuncts, walk
     from .plans.nodes import walk_plan
-
-    def conjuncts(e):
-        from .expressions import BinaryOp
-        if isinstance(e, BinaryOp) and e.op.upper() == "AND":
-            yield from conjuncts(e.left)
-            yield from conjuncts(e.right)
-        else:
-            yield e
 
     from .expressions import WindowFunc as _WF
     for node in walk_plan(plan):

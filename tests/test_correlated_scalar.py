@@ -729,3 +729,66 @@ def test_duplicate_inner_key_with_theta_residue(ab, form):
     assert got == want
     assert {r[1] for r in want} == {0, 1}, "matched and unmatched rows"
 
+
+
+# ---------------------------------------------------------------------------
+# correlated EXISTS / (NOT) IN / LATERAL conditions bind through the one
+# binder (compiler._bind_correlated): any expression the local path
+# compiles may carry the correlation. lineitem is local and orders is
+# on DuckDB, so the subquery body is a federated leaf.
+# ---------------------------------------------------------------------------
+
+_ABS = "o.o_orderkey = abs(l.l_orderkey)"
+_INLIST = "o.o_orderkey = l.l_orderkey AND l.l_returnflag IN ('R', 'A')"
+
+
+@pytest.mark.parametrize("sql", [
+    f"SELECT count(*) FROM lineitem l WHERE EXISTS "
+    f"(SELECT 1 FROM orders o WHERE {_ABS})",
+    "SELECT count(*) FROM lineitem l WHERE EXISTS (SELECT 1 FROM orders o "
+    "WHERE o.o_orderkey = coalesce(l.l_orderkey, 0))",
+    "SELECT count(*) FROM lineitem l WHERE EXISTS (SELECT 1 FROM orders o "
+    "WHERE o.o_orderkey = l.l_orderkey AND o.o_orderstatus = "
+    "CASE WHEN l.l_linestatus = 'F' THEN 'F' ELSE 'O' END)",
+    f"SELECT count(*) FROM lineitem l WHERE EXISTS "
+    f"(SELECT 1 FROM orders o WHERE {_INLIST})",
+    f"SELECT count(*) FROM lineitem l WHERE l.l_suppkey IN "
+    f"(SELECT o.o_custkey FROM orders o WHERE {_ABS})",
+    f"SELECT count(*) FROM lineitem l WHERE l.l_suppkey NOT IN "
+    f"(SELECT o.o_custkey FROM orders o WHERE {_ABS})",
+    f"SELECT count(*) FROM lineitem l, LATERAL "
+    f"(SELECT o.o_totalprice FROM orders o WHERE {_ABS}) s",
+    f"SELECT count(*) FROM lineitem l, LATERAL "
+    f"(SELECT o.o_totalprice FROM orders o WHERE {_INLIST}) s",
+])
+def test_correlation_through_any_expression_matches_duckdb(duckdb_engine,
+                                                           sql):
+    eng, _ex = duckdb_engine
+    # parse, never the Spark SQL view fallback
+    got = eng.execute(eng.sql_plan(sql).plan).collect()[0][0]
+    want = _duck(sql, ["lineitem", "orders"])[0][0]
+    assert got == want and 0 < got
+
+
+@pytest.mark.parametrize("sql", [
+    "SELECT c.c_custkey FROM customer c WHERE EXISTS (SELECT 1 FROM "
+    "orders o WHERE o.o_custkey = c.c_custkey AND o.o_totalprice > "
+    "c.c_acctbal + (SELECT min(n.n_nationkey) FROM nation n))",
+    "SELECT c.c_custkey FROM customer c WHERE c.c_custkey IN (SELECT "
+    "o.o_custkey FROM orders o WHERE o.o_totalprice > "
+    "c.c_acctbal + (SELECT min(n.n_nationkey) FROM nation n))",
+    "SELECT c.c_custkey, s.p FROM customer c, LATERAL (SELECT "
+    "o.o_totalprice AS p FROM orders o WHERE o.o_custkey = c.c_custkey "
+    "AND o.o_totalprice > c.c_acctbal + (SELECT min(n.n_nationkey) "
+    "FROM nation n)) s",
+    "SELECT c.c_custkey, (SELECT count(*) FROM orders o WHERE "
+    "o.o_custkey = c.c_custkey AND o.o_totalprice > c.c_acctbal + "
+    "(SELECT min(n.n_nationkey) FROM nation n)) AS n FROM customer c",
+])
+def test_subquery_inside_correlated_conjunct_refuses(spark, sql):
+    """A subquery inside a correlated conjunct would have to run per
+    outer row: every correlated form refuses it."""
+    eng = _engine(spark, ["customer", "orders", "nation"])
+    with pytest.raises(NotImplementedError,
+                       match="correlated conjunct may not contain"):
+        eng.execute(eng.sql_plan(sql).plan).collect()

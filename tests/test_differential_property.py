@@ -29,6 +29,25 @@ STR_COL = "n_name"
 OPS = ["=", "<>", "<", "<=", ">", ">="]
 
 
+@contextmanager
+def _no_view_fallback(*engs):
+    """Fail instead of letting ``engine.sql`` hand the query to Spark's
+    parser over whole-table views: these tests exist to diff the
+    compiler and the unparser, and a parser gap that falls back would
+    compare Spark SQL with itself. Every engine fixture below runs its
+    tests inside this guard."""
+    def refuse(query, params=None):
+        raise AssertionError(f"fell back to Spark SQL views: {query}")
+
+    for e in engs:
+        e._sql_via_views = refuse
+    try:
+        yield
+    finally:
+        for e in engs:
+            del e._sql_via_views
+
+
 @pytest.fixture(scope="module")
 def engines(spark):
     """One engine with nation LOCAL, one with nation REMOTE (DuckDB)."""
@@ -43,7 +62,8 @@ def engines(spark):
     ex.register_parquet("nation", f"{TESTDATA}/nation.parquet")
     remote_eng = FederationEngine(spark)
     remote_eng.register_remote(SQLProvider(ex), "nation")
-    return local_eng, remote_eng
+    with _no_view_fallback(local_eng, remote_eng):
+        yield local_eng, remote_eng
 
 
 predicates = st.one_of(
@@ -56,24 +76,6 @@ predicates = st.one_of(
     st.tuples(st.sampled_from(KEY_COLS), st.integers(0, 25)).map(
         lambda t: Not(BinaryOp("=", col(t[0]), lit(t[1])))),
 )
-
-
-@contextmanager
-def _no_view_fallback(*engs):
-    """Fail instead of letting ``engine.sql`` hand the query to Spark's
-    parser over whole-table views: these tests exist to diff the
-    compiler and the unparser, and a parser gap that falls back would
-    compare Spark SQL with itself."""
-    def refuse(query, params=None):
-        raise AssertionError(f"fell back to Spark SQL views: {query}")
-
-    for e in engs:
-        e._sql_via_views = refuse
-    try:
-        yield
-    finally:
-        for e in engs:
-            del e._sql_via_views
 
 
 def _rows(engine, plan: Plan):
@@ -317,7 +319,7 @@ def engines2(spark):
         DuckDBExecutor, SQLProvider)
 
     local_eng = FederationEngine(spark)
-    for t in ("orders", "customer"):
+    for t in ("orders", "customer", "lineitem"):
         local_eng.register_local_parquet(t, f"{TESTDATA}/{t}.parquet")
     ex = DuckDBExecutor(name="duck_prop2", compute_context="prop2")
     for t in ("orders", "customer"):
@@ -325,7 +327,8 @@ def engines2(spark):
     remote_eng = FederationEngine(spark)
     remote_eng.register_remote(SQLProvider(ex), "orders")
     remote_eng.register_remote(SQLProvider(ex), "customer")
-    return local_eng, remote_eng
+    with _no_view_fallback(local_eng, remote_eng):
+        yield local_eng, remote_eng
 
 
 @st.composite
@@ -403,7 +406,8 @@ def engines_mixed(spark):
         ex.register_parquet(t, f"{TESTDATA}/{t}.parquet")
         eng.register_remote(prov, t)
     eng.register_local_parquet("lineitem", f"{TESTDATA}/lineitem.parquet")
-    return eng
+    with _no_view_fallback(eng):
+        yield eng
 
 
 #: join edges of the three tables: lineitem-orders and orders-customer
@@ -474,7 +478,8 @@ def engines_asof(spark):
     ex.register_parquet("events", f"{TESTDATA}/events.parquet")
     remote_eng = FederationEngine(spark)
     remote_eng.register_remote(SQLProvider(ex), "events")
-    return local_eng, remote_eng
+    with _no_view_fallback(local_eng, remote_eng):
+        yield local_eng, remote_eng
 
 
 @st.composite
@@ -615,10 +620,9 @@ def test_setop_chains_local_and_federated_match_duckdb(engines, sql):
                  f"read_parquet('{TESTDATA}/nation.parquet')")
     want = sorted(map(tuple, conn.execute(sql).fetchall()))
     conn.close()
-    with _no_view_fallback(local_eng, remote_eng):
-        got_local = sorted(tuple(r) for r in local_eng.sql(sql).collect())
-        assert got_local == want, f"LOCAL diverged on: {sql}"
-        got_fed = sorted(tuple(r) for r in remote_eng.sql(sql).collect())
+    got_local = sorted(tuple(r) for r in local_eng.sql(sql).collect())
+    assert got_local == want, f"LOCAL diverged on: {sql}"
+    got_fed = sorted(tuple(r) for r in remote_eng.sql(sql).collect())
     assert got_fed == want, f"FEDERATED diverged on: {sql}"
 
 
@@ -764,10 +768,9 @@ def test_threevl_local_and_federated_match_duckdb(engines, sql):
                  f"read_parquet('{TESTDATA}/nation.parquet')")
     want = sorted(map(tuple, conn.execute(sql).fetchall()))
     conn.close()
-    with _no_view_fallback(local_eng, remote_eng):
-        got_local = sorted(tuple(r) for r in local_eng.sql(sql).collect())
-        assert got_local == want, f"LOCAL diverged on: {sql}"
-        got_fed = sorted(tuple(r) for r in remote_eng.sql(sql).collect())
+    got_local = sorted(tuple(r) for r in local_eng.sql(sql).collect())
+    assert got_local == want, f"LOCAL diverged on: {sql}"
+    got_fed = sorted(tuple(r) for r in remote_eng.sql(sql).collect())
     assert got_fed == want, f"FEDERATED diverged on: {sql}"
 
 
@@ -911,13 +914,12 @@ def test_lateral_shapes_local_and_federated_match_duckdb(engines, sql):
                  f"read_parquet('{TESTDATA}/nation.parquet')")
     want = sorted(map(tuple, conn.execute(sql).fetchall()))
     conn.close()
-    with _no_view_fallback(local_eng, remote_eng):
-        got_local = sorted(tuple(r) for r in local_eng.sql(sql).collect())
-        assert got_local == want, f"LOCAL diverged on: {sql}"
-        # the lateral body forces itself local, but the remote-engine
-        # run still exercises claim vetting + the left-input federation
-        # boundary
-        got_fed = sorted(tuple(r) for r in remote_eng.sql(sql).collect())
+    got_local = sorted(tuple(r) for r in local_eng.sql(sql).collect())
+    assert got_local == want, f"LOCAL diverged on: {sql}"
+    # the lateral body forces itself local, but the remote-engine
+    # run still exercises claim vetting + the left-input federation
+    # boundary
+    got_fed = sorted(tuple(r) for r in remote_eng.sql(sql).collect())
     assert got_fed == want, f"FEDERATED diverged on: {sql}"
 
 
@@ -968,14 +970,77 @@ def test_correlated_agg_scalar_and_lateral_match_duckdb(engines, pair):
     conn = duckdb.connect()
     conn.execute(f"CREATE VIEW nation AS SELECT * FROM "
                  f"read_parquet('{TESTDATA}/nation.parquet')")
-    with _no_view_fallback(local_eng, remote_eng):
-        for sql in pair:
-            want = sorted(map(tuple, conn.execute(sql).fetchall()))
-            for name, eng in (("LOCAL", local_eng),
-                              ("FEDERATED", remote_eng)):
-                got = sorted(tuple(r) for r in eng.sql(sql).collect())
-                assert got == want, f"{name} diverged on: {sql}"
+    for sql in pair:
+        want = sorted(map(tuple, conn.execute(sql).fetchall()))
+        for name, eng in (("LOCAL", local_eng),
+                          ("FEDERATED", remote_eng)):
+            got = sorted(tuple(r) for r in eng.sql(sql).collect())
+            assert got == want, f"{name} diverged on: {sql}"
     conn.close()
+
+
+# ---------------------------------------------------------------------------
+# correlated EXISTS / NOT EXISTS / (NOT) IN / LATERAL over lineitem (the
+# outer side) and orders (the subquery), with the correlation drawn from
+# every expression form: a bare column, arithmetic, abs/coalesce, CASE,
+# an IN-list and `... IS NULL OR ...`. LOCAL runs both tables in Spark;
+# MIXED reads orders from DuckDB, so the subquery body is a federated
+# leaf the local join binds against.
+# ---------------------------------------------------------------------------
+
+_CORR_PREDICATES = [
+    "o.o_orderkey = l.l_orderkey",
+    "o.o_orderkey = l.l_orderkey * 2 - 1",
+    "o.o_orderkey = abs(l.l_orderkey - 300)",
+    "o.o_orderkey = coalesce(nullif(l.l_orderkey, 3), 7)",
+    "o.o_orderkey = l.l_orderkey AND o.o_orderstatus = "
+    "CASE WHEN l.l_linestatus = 'F' THEN 'F' ELSE 'O' END",
+    "o.o_orderkey = l.l_orderkey AND l.l_returnflag IN ('R', 'A')",
+    "o.o_orderkey = l.l_orderkey AND "
+    "(nullif(l.l_linenumber, 1) IS NULL OR o.o_totalprice > {price})",
+]
+
+
+@st.composite
+def _correlated_predicate_queries(draw):
+    price = draw(st.sampled_from([50000, 150000, 300000]))
+    corr = draw(st.sampled_from(_CORR_PREDICATES)).format(price=price)
+    shape = draw(st.sampled_from(
+        ["exists", "not_exists", "in", "not_in", "lateral",
+         "lateral_topk"]))
+    keys = "SELECT l.l_orderkey, l.l_linenumber"
+    if shape in ("exists", "not_exists"):
+        neg = "NOT " if shape == "not_exists" else ""
+        return (f"{keys} FROM lineitem l WHERE {neg}EXISTS "
+                f"(SELECT 1 FROM orders o WHERE {corr})")
+    if shape in ("in", "not_in"):
+        neg = "NOT " if shape == "not_in" else ""
+        # a NULL probe (nullif) exercises NOT IN's three-valued arm
+        return (f"{keys} FROM lineitem l WHERE nullif(l.l_suppkey, 5) "
+                f"{neg}IN (SELECT o.o_custkey FROM orders o "
+                f"WHERE {corr})")
+    body = f"SELECT o.o_totalprice AS p FROM orders o WHERE {corr}"
+    if shape == "lateral_topk":
+        body += " ORDER BY o.o_totalprice DESC, o.o_orderkey LIMIT 1"
+    return f"{keys}, s.p FROM lineitem l, LATERAL ({body}) s"
+
+
+@settings(max_examples=40, deadline=None, derandomize=True,
+          suppress_health_check=[HealthCheck.function_scoped_fixture,
+                                 HealthCheck.too_slow])
+@given(sql=_correlated_predicate_queries())
+def test_correlated_predicates_local_and_mixed_match_duckdb(
+        engines2, engines_mixed, sql):
+    import duckdb
+    conn = duckdb.connect()
+    for t in ("orders", "lineitem"):
+        conn.execute(f"CREATE VIEW {t} AS SELECT * FROM "
+                     f"read_parquet('{TESTDATA}/{t}.parquet')")
+    want = sorted(map(tuple, conn.execute(sql).fetchall()))
+    conn.close()
+    for name, eng in (("LOCAL", engines2[0]), ("MIXED", engines_mixed)):
+        got = sorted(tuple(r) for r in eng.sql(sql).collect())
+        assert got == want, f"{name} diverged on: {sql}"
 
 
 # ---------------------------------------------------------------------------
@@ -1552,11 +1617,10 @@ def test_composed_shapes_local_and_federated_match_duckdb(engines, pair):
                  f"read_parquet('{TESTDATA}/nation.parquet')")
     want = _nsort(map(tuple, conn.execute(duck_sql).fetchall()))
     conn.close()
-    with _no_view_fallback(local_eng, remote_eng):
-        got_local = _nsort(tuple(r)
-                           for r in local_eng.sql(eng_sql).collect())
-        assert got_local == want, f"LOCAL diverged on: {eng_sql}"
-        got_fed = _nsort(tuple(r) for r in remote_eng.sql(eng_sql).collect())
+    got_local = _nsort(tuple(r)
+                       for r in local_eng.sql(eng_sql).collect())
+    assert got_local == want, f"LOCAL diverged on: {eng_sql}"
+    got_fed = _nsort(tuple(r) for r in remote_eng.sql(eng_sql).collect())
     assert got_fed == want, f"FEDERATED diverged on: {eng_sql}"
 
 

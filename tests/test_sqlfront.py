@@ -5,6 +5,8 @@ agreement with DuckDB oracles.
 
 from __future__ import annotations
 
+from decimal import Decimal
+
 import duckdb
 import pytest
 
@@ -2700,6 +2702,32 @@ def test_lambda_keeps_scan_federated_but_call_local(duckdb_engine):
     assert any(isinstance(n, RemoteQueryNode) for n in walk_plan(fed))
     rows = eng.execute(fed).collect()
     assert len(rows) == 10                      # custkeys 0..9
+
+
+# Spark SQL text handed to F.expr (a lambda call, a DISTINCT aggregate
+# other than count/sum) comes from the spark dialect, so literals and
+# IS [NOT] DISTINCT FROM read back exactly as spark.sql reads them
+@pytest.mark.parametrize("q, params", [
+    ("SELECT k, transform(arr, x -> x + :p) AS r FROM hof_t",
+     {"p": Decimal("1.5")}),
+    ("SELECT avg(DISTINCT k + :p) AS r FROM hof_t", {"p": Decimal("1.5")}),
+    ("SELECT k, filter(arr, x -> b <> :p OR x = 1) AS r FROM hof_t",
+     {"p": b"ab"}),
+    ("SELECT k, filter(arr, x -> x IS DISTINCT FROM 1) AS r FROM hof_t",
+     None),
+    ("SELECT k, filter(arr, x -> x IS NOT DISTINCT FROM 2) AS r "
+     "FROM hof_t", None),
+])
+def test_spark_sql_text_matches_spark_sql(spark, q, params):
+    from datafusion_federation_spark.engine import FederationEngine
+    eng = FederationEngine(spark)
+    eng.register_local_df("hof_t", spark.createDataFrame(
+        [(1, [1, 2, None], b"ab"), (2, [3, None], b"cd")],
+        "k INT, arr ARRAY<INT>, b BINARY"))
+    plan = eng.sql_plan(q).plan          # parsed: no view fallback
+    got = sorted(map(tuple, eng.execute(plan, params=params).collect()))
+    want = sorted(map(tuple, spark.sql(q, args=params).collect()))
+    assert got == want
 
 
 def test_grouping_set_keys_with_select_aliases(spark):
